@@ -4,29 +4,24 @@ Reference parity: the reference runs its KDE / raster-resize pipeline in
 a custom CRS (test/.../CustomCRSKDERasterResizeIT.java:88-89) and
 reprojects raster coverage envelopes into the index CRS on ingest
 (core/geotime/.../RasterDataAdapter.java:444-550, via geotools).  No
-geotools/pyproj/GDAL exists in this container, so the transforms are
-implemented from the published formulas — spherical web mercator
-(EPSG:3857, the slippy-map projection) and transverse mercator via the
-Krüger n-series to n⁴ (Karney 2011, "Transverse Mercator with an
-accuracy of a few nanometers"; coefficients also in IOGP Guidance Note
-7-2) — as pure ``pyspark.sql.functions`` column expressions: JVM-side,
-whole-stage-codegen, zero Python in the hot path.  The numpy twins back
-driver-side envelope densification and the test oracles.
+geotools/pyproj/GDAL exists in this container: this module resolves CRS
+strings to :mod:`crs_conic` projections, which write every published
+formula once against an ops shim, and evaluates them as pure
+``pyspark.sql.functions`` column expressions (JVM-side, whole-stage
+codegen, zero Python in the hot path) or as numpy (driver-side envelope
+densification).
 
 Supported CRS strings:
 
-* ``EPSG:4326``  — lon/lat WGS84 (identity; the engine's index CRS)
-* ``EPSG:3857``  — WGS84 spherical web mercator
-* ``EPSG:326zz`` / ``EPSG:327zz`` — UTM zone zz north / south (WGS84)
-* via :mod:`crs_conic` (same ops-shim formulas, Catalyst + numpy):
-  Lambert Conformal Conic (EPSG:2154, EPSG:3034, …), Albers Equal-Area
-  (EPSG:5070), Lambert Azimuthal Equal-Area (EPSG:3035), ellipsoidal
-  Mercator (EPSG:3395), generic Transverse Mercator, and arbitrary
-  ``+proj=`` parameter strings
-
-The Krüger series at n⁴ is accurate to well under a millimeter inside a
-UTM zone (|λ−λ₀| ≤ 3°), which matches the reference's geotools
-``lenient=true`` transform tolerance.
+* ``EPSG:4326`` — lon/lat WGS84 (identity; the engine's index CRS)
+* ``EPSG:3857`` — WGS84 spherical web mercator (``MercatorSpherical``)
+* ``EPSG:326zz`` / ``EPSG:327zz`` — UTM zone zz north / south: WGS84
+  ``TransverseMercatorGeneric`` (Krüger n⁴, well under a millimeter
+  inside the zone — the reference's geotools ``lenient=true``
+  tolerance), k₀ = 0.9996, FE = 500 000 m, FN = 0 / 10 000 000 m
+* any :func:`crs_conic.resolve` code or ``+proj=`` string: LCC, Albers,
+  LAEA, ellipsoidal Mercator, generic TM, polar stereographic, and
+  datum-shifted (Helmert) codes
 """
 
 from __future__ import annotations
@@ -40,71 +35,42 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import crs_conic
+
 # WGS84 ellipsoid
 A_WGS84 = 6378137.0
 F_WGS84 = 1.0 / 298.257223563
 
-# third flattening and rectifying radius (Krüger)
-_N = F_WGS84 / (2.0 - F_WGS84)
-_A1 = A_WGS84 / (1.0 + _N) * (1.0 + _N**2 / 4.0 + _N**4 / 64.0)
-
-# forward series α, inverse series β, conformal→geodetic series δ
-_ALPHA = (
-    _N / 2.0 - 2.0 * _N**2 / 3.0 + 5.0 * _N**3 / 16.0 + 41.0 * _N**4 / 180.0,
-    13.0 * _N**2 / 48.0 - 3.0 * _N**3 / 5.0 + 557.0 * _N**4 / 1440.0,
-    61.0 * _N**3 / 240.0 - 103.0 * _N**4 / 140.0,
-    49561.0 * _N**4 / 161280.0,
-)
-_BETA = (
-    _N / 2.0 - 2.0 * _N**2 / 3.0 + 37.0 * _N**3 / 96.0 - _N**4 / 360.0,
-    _N**2 / 48.0 + _N**3 / 15.0 - 437.0 * _N**4 / 1440.0,
-    17.0 * _N**3 / 480.0 - 37.0 * _N**4 / 840.0,
-    4397.0 * _N**4 / 161280.0,
-)
-_DELTA = (
-    2.0 * _N - 2.0 * _N**2 / 3.0 - 2.0 * _N**3 + 116.0 * _N**4 / 45.0,
-    7.0 * _N**2 / 3.0 - 8.0 * _N**3 / 5.0 - 227.0 * _N**4 / 45.0,
-    56.0 * _N**3 / 15.0 + 136.0 * _N**4 / 35.0,
-    4279.0 * _N**4 / 630.0,
-)
-
-_K0_UTM = 0.9996
-_FE_UTM = 500000.0
-_FN_SOUTH = 10000000.0
-# eccentricity term used by the conformal-latitude forward step
-_E2N = 2.0 * math.sqrt(_N) / (1.0 + _N)
-
 WEB_MERCATOR_EXTENT = A_WGS84 * math.pi  # 20037508.342789244
-# EPSG:3857's published latitude domain: atan(sinh(π)) — poles are outside
-# the projection; the numpy twin clamps here so no inf is ever computed
-WEB_MERCATOR_MAX_LAT = math.degrees(math.atan(math.sinh(math.pi)))  # 85.05112877980659
 
 _UTM_RE = re.compile(r"^EPSG:32([67])(\d\d)$")
 
 
 @functools.lru_cache(maxsize=256)
 def _parse(crs: str):
-    """→ ("lonlat",) | ("webmerc",) | ("utm", lon0_deg, fn) |
-    ("ext", proj, area) — the last via :mod:`crs_conic` (LCC / Albers /
-    LAEA / ellipsoidal Mercator / generic TM, EPSG registry + proj
-    strings).  Cached: extension parsing tokenizes a proj string and
-    precomputes transcendental scalar constants, and driver planning
-    loops (warp block plans) call transform_np thousands of times."""
+    """→ (kind, proj, area).  ``proj`` is the :mod:`crs_conic` projection
+    that holds every formula (None for lon/lat); ``kind`` ("lonlat" |
+    "webmerc" | "utm" | "ext") and the lon/lat ``area`` of use only pick
+    :func:`crs_extent`'s rule.  Cached: extension parsing tokenizes a
+    proj string and precomputes transcendental scalar constants, and
+    driver planning loops (warp block plans) call transform_np thousands
+    of times."""
     c = crs.upper().replace(" ", "")
     if c in ("EPSG:4326", "CRS:84", "WGS84"):
-        return ("lonlat",)
+        return ("lonlat", None, None)
     if c in ("EPSG:3857", "EPSG:900913"):
-        return ("webmerc",)
+        return ("webmerc", crs_conic.MercatorSpherical(A_WGS84, 0.0, 0.0, 0.0, 0.0, c), None)
     m = _UTM_RE.match(c)
     if m:
         zone = int(m.group(2))
         if not 1 <= zone <= 60:
             raise ValueError(f"bad UTM zone in {crs}")
         lon0 = -183.0 + 6.0 * zone
-        fn = _FN_SOUTH if m.group(1) == "7" else 0.0
-        return ("utm", lon0, fn)
-    from . import crs_conic
-
+        fn = 10000000.0 if m.group(1) == "7" else 0.0
+        proj = crs_conic.TransverseMercatorGeneric(
+            A_WGS84, F_WGS84, 0.0, math.radians(lon0), 500000.0, fn, k0=0.9996, name=c
+        )
+        return ("utm", proj, (lon0 - 3.0, -80.0, lon0 + 3.0, 84.0))
     ext = crs_conic.resolve(crs)
     if ext is not None:
         return ("ext", ext[0], ext[1])
@@ -117,23 +83,24 @@ def _parse(crs: str):
 def crs_extent(crs: str) -> tuple[float, float, float, float]:
     """Full valid (minx, miny, maxx, maxy) of the CRS plane — the KDE /
     tile grid extent (mirrors the reference's CRS-bounds-driven grid)."""
-    kind = _parse(crs)
-    if kind[0] == "lonlat":
+    kind, _, area = _parse(crs)
+    if kind == "lonlat":
         return (-180.0, -90.0, 180.0, 90.0)
-    if kind[0] == "webmerc":
+    if kind == "webmerc":
         e = WEB_MERCATOR_EXTENT
         return (-e, -e, e, e)
-    if kind[0] == "ext":
+    if kind == "ext":
         # extension CRS: the registry's area-of-use bbox projected.
         # densify=181 (2° steps): polar caps trace a full circle along
         # one lon/lat edge, and coarse sampling would undercut its bbox
         # radius by up to cos(half-step)
-        return reproject_envelope(kind[2], "EPSG:4326", crs, densify=181)
+        return reproject_envelope(area, "EPSG:4326", crs, densify=181)
     # UTM: the official zone box (6° wide, 84N..80S) projected
-    _, lon0, fn = kind
+    west, south, east, north = area
+    lon0 = (west + east) / 2.0
     xs, ys = transform_np(
-        np.array([lon0 - 3.0, lon0 + 3.0, lon0, lon0]),
-        np.array([0.0, 0.0, -80.0, 84.0]),
+        np.array([west, east, lon0, lon0]),
+        np.array([0.0, 0.0, south, north]),
         "EPSG:4326",
         crs,
     )
@@ -148,104 +115,43 @@ def crs_extent(crs: str) -> tuple[float, float, float, float]:
 def _arrow_transform_cols(proj, a: Column, b: Column, inverse: bool) -> tuple[Column, Column]:
     """Datum-shifted transforms as ONE Arrow-batched numpy evaluation.
 
-    A DatumShifted chain (geodetic→geocentric→Helmert→geodetic→
-    projection) inlined as a Catalyst expression duplicates its subtree
-    multiplicatively at every reuse point; embedded in a larger stage
-    (e.g. KDE binning, which references x and y several times) the
-    generated code grows past what janino can compile — measured
-    OutOfMemoryError on KDE + EPSG:23032.  Expressions have no
-    let-binding, so the structural fix is evaluation through the numpy
-    twin in a single vectorized pandas UDF returning a struct: both
-    output columns read fields of the SAME UDF call (one Arrow pass, no
-    per-row Python), and the values are bit-identical to the plain-
-    Catalyst path wherever libm agrees because the numpy twin consumes
-    literally the same parse-time literals."""
-    from .crs_conic import NUMPY_OPS
+    Inlined as a Catalyst expression, a DatumShifted chain (geodetic→
+    geocentric→Helmert→geodetic→projection) duplicates its subtree at
+    every reuse point (expressions have no let-binding); inside KDE
+    binning the generated code outgrew janino (measured OutOfMemoryError
+    on KDE + EPSG:23032).  One vectorized pandas UDF returning a struct
+    evaluates the numpy backend once per Arrow batch; both output columns
+    read fields of that same call, on the same parse-time literals."""
 
     @F.pandas_udf("x double, y double")
     def _tx(u: pd.Series, v: pd.Series) -> pd.DataFrame:
         fn = proj.inverse if inverse else proj.forward
-        X, Y = fn(NUMPY_OPS, u.to_numpy(np.float64), v.to_numpy(np.float64))
+        X, Y = fn(crs_conic.NUMPY_OPS, u.to_numpy(np.float64), v.to_numpy(np.float64))
         return pd.DataFrame({"x": X, "y": Y})
 
     out = _tx(a, b)
     return out.getField("x"), out.getField("y")
 
 
+def _transform_cols(crs: str, a: Column | str, b: Column | str, inverse: bool):
+    a = F.col(a) if isinstance(a, str) else a
+    b = F.col(b) if isinstance(b, str) else b
+    proj = _parse(crs)[1]
+    if proj is None:
+        return a, b
+    if isinstance(proj, crs_conic.DatumShifted):
+        return _arrow_transform_cols(proj, a, b, inverse)
+    return (proj.inverse if inverse else proj.forward)(crs_conic.CATALYST_OPS, a, b)
+
+
 def forward_cols(crs: str, lon: Column | str, lat: Column | str) -> tuple[Column, Column]:
     """(lon°, lat°) → projected (x, y) as Catalyst columns."""
-    lon = F.col(lon) if isinstance(lon, str) else lon
-    lat = F.col(lat) if isinstance(lat, str) else lat
-    kind = _parse(crs)
-    if kind[0] == "lonlat":
-        return lon, lat
-    if kind[0] == "ext":
-        from .crs_conic import CATALYST_OPS, DatumShifted
-
-        if isinstance(kind[1], DatumShifted):
-            return _arrow_transform_cols(kind[1], lon, lat, inverse=False)
-        return kind[1].forward(CATALYST_OPS, lon, lat)
-    if kind[0] == "webmerc":
-        # deg→rad as one multiply by the rounded π/180 literal (NOT
-        # F.radians, which the JVM evaluates as x/180*π): the same single
-        # IEEE op in any engine, so the DuckDB oracle twin is bit-exact
-        d2r = F.lit(math.pi / 180.0)
-        x = lon * d2r * F.lit(A_WGS84)
-        y = F.log(F.tan(F.lit(math.pi / 4.0) + lat * d2r / F.lit(2.0))) * F.lit(
-            A_WGS84
-        )
-        return x, y
-    _, lon0, fn = kind
-    phi = F.radians(lat)
-    lam = F.radians(lon - F.lit(lon0))
-    sphi = F.sin(phi)
-    # conformal latitude:  t = sinh(atanh sinφ − e·atanh(e·sinφ)), e-term via 2√n/(1+n)
-    t = F.sinh(F.atanh(sphi) - F.lit(_E2N) * F.atanh(F.lit(_E2N) * sphi))
-    xi = F.atan2(t, F.cos(lam))
-    eta = F.atanh(F.sin(lam) / F.sqrt(F.lit(1.0) + t * t))
-    xs, es = xi, eta
-    for j, a in enumerate(_ALPHA, start=1):
-        xs = xs + F.lit(a) * F.sin(F.lit(2.0 * j) * xi) * F.cosh(F.lit(2.0 * j) * eta)
-        es = es + F.lit(a) * F.cos(F.lit(2.0 * j) * xi) * F.sinh(F.lit(2.0 * j) * eta)
-    x = F.lit(_FE_UTM) + F.lit(_K0_UTM * _A1) * es
-    y = F.lit(fn) + F.lit(_K0_UTM * _A1) * xs
-    return x, y
+    return _transform_cols(crs, lon, lat, inverse=False)
 
 
 def inverse_cols(crs: str, x: Column | str, y: Column | str) -> tuple[Column, Column]:
     """projected (x, y) → (lon°, lat°) as Catalyst columns."""
-    x = F.col(x) if isinstance(x, str) else x
-    y = F.col(y) if isinstance(y, str) else y
-    kind = _parse(crs)
-    if kind[0] == "lonlat":
-        return x, y
-    if kind[0] == "ext":
-        from .crs_conic import CATALYST_OPS
-
-        from .crs_conic import DatumShifted
-
-        if isinstance(kind[1], DatumShifted):
-            return _arrow_transform_cols(kind[1], x, y, inverse=True)
-        return kind[1].inverse(CATALYST_OPS, x, y)
-    if kind[0] == "webmerc":
-        lon = F.degrees(x / F.lit(A_WGS84))
-        lat = F.degrees(
-            F.lit(2.0) * F.atan(F.exp(y / F.lit(A_WGS84))) - F.lit(math.pi / 2.0)
-        )
-        return lon, lat
-    _, lon0, fn = kind
-    xi = (y - F.lit(fn)) / F.lit(_K0_UTM * _A1)
-    eta = (x - F.lit(_FE_UTM)) / F.lit(_K0_UTM * _A1)
-    xp, ep = xi, eta
-    for j, b in enumerate(_BETA, start=1):
-        xp = xp - F.lit(b) * F.sin(F.lit(2.0 * j) * xi) * F.cosh(F.lit(2.0 * j) * eta)
-        ep = ep - F.lit(b) * F.cos(F.lit(2.0 * j) * xi) * F.sinh(F.lit(2.0 * j) * eta)
-    chi = F.asin(F.sin(xp) / F.cosh(ep))
-    phi = chi
-    for j, d in enumerate(_DELTA, start=1):
-        phi = phi + F.lit(d) * F.sin(F.lit(2.0 * j) * chi)
-    lam = F.atan2(F.sinh(ep), F.cos(xp))
-    return F.lit(lon0) + F.degrees(lam), F.degrees(phi)
+    return _transform_cols(crs, x, y, inverse=True)
 
 
 def transform_df(
@@ -266,68 +172,15 @@ def transform_df(
 
 
 # --------------------------------------------------------------------------
-# numpy twins (driver-side envelopes + test oracles)
+# numpy (driver-side envelopes and metadata)
 # --------------------------------------------------------------------------
 
 
-def _forward_np(crs: str, lon: np.ndarray, lat: np.ndarray):
-    kind = _parse(crs)
-    if kind[0] == "lonlat":
-        return lon.copy(), lat.copy()
-    if kind[0] == "ext":
-        from .crs_conic import NUMPY_OPS
-
-        return kind[1].forward(NUMPY_OPS, lon, lat)
-    if kind[0] == "webmerc":
-        d2r = math.pi / 180.0
-        # clamp to the projection's domain (|φ| ≤ 85.051129°) so the pole
-        # rows of a 4326 warp grid never feed log(tan(·)) an overflow —
-        # correctness must not ride on IEEE inf propagation
-        lat_c = np.clip(lat, -WEB_MERCATOR_MAX_LAT, WEB_MERCATOR_MAX_LAT)
-        return (
-            lon * d2r * A_WGS84,
-            np.log(np.tan(math.pi / 4.0 + lat_c * d2r / 2.0)) * A_WGS84,
-        )
-    _, lon0, fn = kind
-    phi = np.radians(lat)
-    lam = np.radians(lon - lon0)
-    sphi = np.sin(phi)
-    t = np.sinh(np.arctanh(sphi) - _E2N * np.arctanh(_E2N * sphi))
-    xi = np.arctan2(t, np.cos(lam))
-    eta = np.arctanh(np.sin(lam) / np.sqrt(1.0 + t * t))
-    xs, es = xi.copy(), eta.copy()
-    for j, a in enumerate(_ALPHA, start=1):
-        xs += a * np.sin(2.0 * j * xi) * np.cosh(2.0 * j * eta)
-        es += a * np.cos(2.0 * j * xi) * np.sinh(2.0 * j * eta)
-    return _FE_UTM + _K0_UTM * _A1 * es, fn + _K0_UTM * _A1 * xs
-
-
-def _inverse_np(crs: str, x: np.ndarray, y: np.ndarray):
-    kind = _parse(crs)
-    if kind[0] == "lonlat":
-        return x.copy(), y.copy()
-    if kind[0] == "ext":
-        from .crs_conic import NUMPY_OPS
-
-        return kind[1].inverse(NUMPY_OPS, x, y)
-    if kind[0] == "webmerc":
-        return (
-            np.degrees(x / A_WGS84),
-            np.degrees(2.0 * np.arctan(np.exp(y / A_WGS84)) - math.pi / 2.0),
-        )
-    _, lon0, fn = kind
-    xi = (y - fn) / (_K0_UTM * _A1)
-    eta = (x - _FE_UTM) / (_K0_UTM * _A1)
-    xp, ep = xi.copy(), eta.copy()
-    for j, b in enumerate(_BETA, start=1):
-        xp -= b * np.sin(2.0 * j * xi) * np.cosh(2.0 * j * eta)
-        ep -= b * np.cos(2.0 * j * xi) * np.sinh(2.0 * j * eta)
-    chi = np.arcsin(np.sin(xp) / np.cosh(ep))
-    phi = chi.copy()
-    for j, d in enumerate(_DELTA, start=1):
-        phi += d * np.sin(2.0 * j * chi)
-    lam = np.arctan2(np.sinh(ep), np.cos(xp))
-    return lon0 + np.degrees(lam), np.degrees(phi)
+def _transform_arrays(crs: str, a: np.ndarray, b: np.ndarray, inverse: bool):
+    proj = _parse(crs)[1]
+    if proj is None:
+        return a.copy(), b.copy()
+    return (proj.inverse if inverse else proj.forward)(crs_conic.NUMPY_OPS, a, b)
 
 
 def transform_np(
@@ -337,8 +190,8 @@ def transform_np(
     oracle use; the distributed path is :func:`transform_df`)."""
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
-    lon, lat = _inverse_np(src, x, y)
-    return _forward_np(dst, lon, lat)
+    lon, lat = _transform_arrays(src, x, y, inverse=True)
+    return _transform_arrays(dst, lon, lat, inverse=False)
 
 
 def reproject_envelope(

@@ -1,23 +1,26 @@
-"""Arbitrary-CRS extension: conic / azimuthal / cylindrical projections.
+"""CRS projection formulas: conic / azimuthal / cylindrical / transverse.
 
 Reference parity: the reference accepts any geotools-decodable CRS for
 KDE grids and raster mosaics (GeoWaveRasterReader.java:492-744,
 RasterDataAdapter.java:444-550 reproject through geotools'
-``CRS.decode``/``ReferencedEnvelope.transform``).  ``crs.py`` covers the
-three CRS families the driver gates (4326 / 3857 / UTM); this module
-extends the same dispatch to the remaining projection methods that
-dominate real-world EPSG usage, implemented from the published EPSG
-Guidance Note 7-2 formulas (IOGP, public):
+``CRS.decode``/``ReferencedEnvelope.transform``).  This module is the
+single formula source behind ``crs.py``'s dispatch, for the three CRS
+families the driver gates (EPSG:3857 via :class:`MercatorSpherical`,
+UTM via :class:`TransverseMercatorGeneric`; 4326 is the identity) and
+for the projection methods that dominate real-world EPSG usage,
+implemented from the published EPSG Guidance Note 7-2 formulas (IOGP,
+public):
 
 * **Lambert Conformal Conic 2SP** (EPSG method 9802; 1SP 9801 as the
   φ₁=φ₂ limit) — e.g. EPSG:2154 Lambert-93, EPSG:3034 ETRS89-LCC.
 * **Albers Equal-Area** (method 9822) — e.g. EPSG:5070 CONUS Albers.
 * **Lambert Azimuthal Equal-Area, oblique** (method 9820) — e.g.
   EPSG:3035 ETRS89-LAEA.
-* **Mercator, ellipsoidal** (methods 9804/9805).
+* **Mercator, ellipsoidal** (methods 9804/9805) and **spherical
+  Pseudo-Mercator** (method 1024, EPSG:3857).
 * **Transverse Mercator, arbitrary parameters** (method 9807) via the
-  same Krüger n-series as ``crs.py`` but parameterized over ellipsoid,
-  λ₀, k₀, FE/FN, φ₀.
+  Krüger n-series, parameterized over ellipsoid, λ₀, k₀, FE/FN, φ₀ —
+  UTM is its WGS84 / k₀ = 0.9996 instance.
 
 Plus a proj-string front door (``+proj=lcc +lat_1=… +ellps=GRS80 …``)
 mirroring geotools' ability to build a CRS from parameters, and an EPSG
@@ -26,11 +29,10 @@ registry for the common codes.
 Design: every formula is written ONCE against a tiny ops shim, then
 evaluated twice — with Catalyst ``pyspark.sql.functions`` (JVM-side,
 whole-stage-codegen, the distributed hot path) and with numpy (the
-driver-side envelope math and the independent test oracle).  Scalar
-projection constants (n, F, ρ₀, …) are computed at parse time in plain
-Python floats, so both backends consume literally identical literals and
-the two paths agree to the last IEEE bit wherever the engines' libm
-agree.
+driver-side envelope math).  Scalar projection constants (n, F, ρ₀, …)
+are computed at parse time in plain Python floats, so both backends
+consume literally identical literals and the two paths agree to the
+last IEEE bit wherever the engines' libm agree.
 
 Datum handling: GRS80 vs WGS84 ellipsoids are honored exactly (their
 flattenings differ).  All-zero ``towgs84`` stays the identity fast path,
@@ -79,7 +81,11 @@ CATALYST_OPS = SimpleNamespace(
     exp=F.exp,
     pow=F.pow,
     where=lambda c, a, b: F.when(c, a).otherwise(b),
-    clip=lambda x, lo, hi: F.least(F.greatest(x, F.lit(lo)), F.lit(hi)),
+    # null and NaN pass through as in np.clip: greatest() alone would
+    # skip a null (→ lo) and Spark orders NaN above hi
+    clip=lambda x, lo, hi: F.when(x.isNull() | F.isnan(x), x).otherwise(
+        F.least(F.greatest(x, F.lit(lo)), F.lit(hi))
+    ),
     mod=lambda x, m: F.pmod(x, F.lit(m)),
 )
 
@@ -397,6 +403,29 @@ class MercatorEllipsoidal(_Proj):
         return self._norm_lam(o, lam) * R2D, self._phi_from_t(o, t) * R2D
 
 
+class MercatorSpherical(_Proj):
+    """EPSG method 1024, Popular Visualisation Pseudo-Mercator
+    (EPSG:3857): spherical Mercator formulas on the semi-major axis.
+
+    Latitude clamps to ±MAX_LAT = atan(sinh π) — the square-world bound,
+    where y = ±a·π — in both backends, so a pole never reaches log(0).
+    Degrees → radians is one multiply by the rounded π/180 literal (not
+    a radians() call, which the JVM evaluates as x/180·π): the same IEEE
+    op in any engine, so the SQL KDE oracle reproduces x and y bit for
+    bit."""
+
+    MAX_LAT = math.degrees(math.atan(math.sinh(math.pi)))  # 85.05112877980659
+
+    def forward(self, o, lon_deg, lat_deg):
+        lat = o.clip(lat_deg, -self.MAX_LAT, self.MAX_LAT)
+        y = o.log(o.tan(math.pi / 4.0 + lat * D2R / 2.0)) * self.a
+        return lon_deg * D2R * self.a, y
+
+    def inverse(self, o, x, y):
+        lat = 2.0 * o.atan(o.exp(y / self.a)) - math.pi / 2.0
+        return x / self.a * R2D, lat * R2D
+
+
 class PolarStereographic(_Proj):
     """EPSG methods 9810 (variant A: k₀ at the pole) and 9829/9830
     (variant B/C: standard parallel φ_ts) — the polar complement to the
@@ -457,15 +486,14 @@ class GeographicLonLat(_Proj):
 
 class TransverseMercatorGeneric(_Proj):
     """EPSG method 9807 — Krüger n-series to n⁴ (Karney 2011 / IOGP
-    GN7-2), parameterized over ellipsoid, λ₀, φ₀, k₀, FE/FN.  The same
-    series as ``crs.py``'s fixed-WGS84 UTM path, recomputed for the
-    requested ellipsoid at parse time.
+    GN7-2), parameterized over ellipsoid, λ₀, φ₀, k₀, FE/FN and
+    recomputed for the requested ellipsoid at parse time; ``crs.py``
+    resolves UTM zones to this class.
 
-    The duplication with crs.py's UTM branch is DELIBERATE: that path is
-    this module's independent cross-check anchor
-    (tests/test_crs_conic.py::test_generic_tmerc_matches_trusted_utm_path
-    pins the two to 1e-6 m over the zone), so folding one into the other
-    would turn the cross-implementation oracle into a tautology."""
+    Its independent cross-check is the hand-written fixed-WGS84 numpy
+    series in tests/crs_oracle.py (pinned to 1e-6 m over a UTM zone by
+    tests/test_crs_conic.py::test_generic_tmerc_matches_trusted_utm_path).
+    """
 
     def __init__(self, a, f, lat0, lon0, fe, fn, k0=1.0, name=""):
         super().__init__(a, f, lon0, fe, fn, name)

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -140,25 +140,6 @@ def envelope_cells_udf(
         return pd.Series(out)
 
     return _ins
-
-
-def with_envelope_cells(
-    df: DataFrame,
-    minx: Column,
-    miny: Column,
-    maxx: Column,
-    maxy: Column,
-    strategy: TieredStrategy = DEFAULT_STRATEGY,
-    max_duplicates: int = 4,
-) -> DataFrame:
-    """Explode each row into its insertion cells: one row per (tier, cell)."""
-    ins = envelope_cells_udf(strategy, max_duplicates)(minx, miny, maxx, maxy)
-    return (
-        df.withColumn("_ins", F.explode(ins))
-        .withColumn("tier", F.col("_ins.tier"))
-        .withColumn("cell", F.col("_ins.cell"))
-        .drop("_ins")
-    )
 
 
 def polygon_cells_udf(

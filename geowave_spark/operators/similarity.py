@@ -28,11 +28,21 @@ from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType, Stru
 
 
 def _cosine_expr(a: str, b: str):
-    """Catalyst cosine similarity between two array<double> columns."""
+    """Catalyst cosine similarity between two array<double> columns; an
+    all-zero vector has similarity 0.0 with anything (as in
+    :func:`_unit_rows`)."""
     dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
     na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
     nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-    return dot / (na * nb)
+    den = na * nb
+    return F.when(den > 0.0, dot / den).otherwise(F.lit(0.0))
+
+
+def _unit_rows(X: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm; all-zero rows stay zero, so their
+    cosine with anything is 0.0 (the rule of :func:`_cosine_expr`)."""
+    n = np.linalg.norm(X, axis=1, keepdims=True)
+    return np.divide(X, n, out=np.zeros_like(X), where=n > 0.0)
 
 
 def brute_topk(
@@ -64,7 +74,7 @@ def brute_topk(
         q_rows = q.collect()
         qids = [r["_qid"] for r in q_rows]
         qm = np.array([r["_qv"] for r in q_rows], dtype=np.float64)
-        qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
+        qn = _unit_rows(qm)
         spark = queries.sparkSession
         bc = spark.sparkContext.broadcast((qids, qn))
 
@@ -87,7 +97,7 @@ def brute_topk(
             ids_arr = np.asarray(ids)
             for pdf in batches:
                 nm = np.array(pdf["_nv"].tolist(), dtype=np.float64)
-                nm = nm / np.linalg.norm(nm, axis=1, keepdims=True)
+                nm = _unit_rows(nm)
                 sims = qmat @ nm.T  # (Q, B)
                 B = sims.shape[1]
                 if B > keep_n:
@@ -146,7 +156,7 @@ def train_centroids(
         .collect()
     )
     X = np.array([r[1] for r in pdf], dtype=np.float64)
-    X = X / np.linalg.norm(X, axis=1, keepdims=True)
+    X = _unit_rows(X)
     rng = np.random.default_rng(seed)
     cent = X[rng.choice(len(X), num_centroids, replace=False)]
     for _ in range(iters):
@@ -155,7 +165,7 @@ def train_centroids(
             m = assign == j
             if m.any():
                 v = X[m].mean(axis=0)
-                cent[j] = v / np.linalg.norm(v)
+                cent[j] = _unit_rows(v[None])[0]
     return cent
 
 
@@ -179,13 +189,13 @@ def ivf_topk(
     @F.pandas_udf(IntegerType())
     def _bucket(v: pd.Series) -> pd.Series:
         X = np.array(v.tolist(), dtype=np.float64)
-        X = X / np.linalg.norm(X, axis=1, keepdims=True)
+        X = _unit_rows(X)
         return pd.Series(np.argmax(X @ bc.value.T, axis=1).astype(np.int32))
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def _probes(v: pd.Series) -> pd.Series:
         X = np.array(v.tolist(), dtype=np.float64)
-        X = X / np.linalg.norm(X, axis=1, keepdims=True)
+        X = _unit_rows(X)
         sims = X @ bc.value.T
         order = np.argsort(-sims, axis=1)[:, :nprobe].astype(np.int32)
         return pd.Series(list(order))
@@ -315,7 +325,7 @@ def sq_topk(
     ).collect()
     qids = [r["_qid"] for r in q_rows]
     qm = np.array([r["_qv"] for r in q_rows], dtype=np.float64)
-    qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
+    qn = _unit_rows(qm)
     spark = queries.sparkSession
     bc = spark.sparkContext.broadcast((qids, qn, mins, scales))
     self_pad = 1 if exclude_self else 0
@@ -337,7 +347,7 @@ def sq_topk(
         for pdf in batches:
             raw = np.frombuffer(b"".join(pdf["_code"]), dtype=np.uint8)
             X = raw.reshape(len(pdf), -1) * sc + mn  # dequantized approx
-            X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+            X = _unit_rows(X)
             sims = qmat @ X.T
             B = sims.shape[1]
             if B > keep_n:

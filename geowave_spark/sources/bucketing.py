@@ -88,14 +88,16 @@ def _clear_stale_location(spark: SparkSession, table: str) -> None:
     normal overwrite path handles this — the fallback is for
     local/in-memory catalogs.)"""
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    if wh.startswith("file:"):
+    # a managed table lives at {database location}/{table}: the
+    # warehouse dir for `default`, {warehouse}/{db}.db for `db.table`
+    parts = table.split(".")
+    db = parts[-2] if len(parts) > 1 else spark.catalog.currentDatabase()
+    db_loc = spark.catalog.getDatabase(db).locationUri
+    if db_loc.startswith("file:"):
         import shutil
         from urllib.parse import urlparse
 
-        path = urlparse(wh).path
-        loc = f"{path}/{table.split('.')[-1].lower()}"
-        shutil.rmtree(loc, ignore_errors=True)
+        shutil.rmtree(f"{urlparse(db_loc).path}/{parts[-1].lower()}", ignore_errors=True)
 
 
 def write_bucketed_points(

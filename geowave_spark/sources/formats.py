@@ -443,11 +443,21 @@ def read_geojson(
     )
     coerce = {k: t for k, t in prop_cols}
 
+    def _as_long(k, v):
+        # a later file can hold what the first file's probe never saw;
+        # int(3.7) would silently truncate it
+        if isinstance(v, int) and not isinstance(v, bool):
+            return v
+        if isinstance(v, float) and v.is_integer():
+            return int(v)
+        raise ValueError(
+            f"GeoJSON property {k!r} was probed as long from {first!r} but "
+            f"another feature holds {v!r}"
+        )
+
     def _parse(content: bytes):
         feats = _geojson_features(json.loads(content))
         rows = _feature_rows(feats, keys)
-        # coerce numeric widening (a long-probed column may meet floats
-        # in later files only if the probe undersold it — cast defensively)
         out = []
         for r in rows:
             fixed = list(r[:3])
@@ -457,7 +467,7 @@ def read_geojson(
                     if t == "double":
                         v = float(v)
                     elif t == "long":
-                        v = int(v)
+                        v = _as_long(k, v)
                     elif t == "string" and not isinstance(v, str):
                         v = json.dumps(v)
                     elif t == "boolean":

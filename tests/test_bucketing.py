@@ -92,6 +92,22 @@ class TestBucketedJoin:
         finally:
             spark.sql("DROP TABLE IF EXISTS test_plain_pts")
 
+    def test_overwrite_db_qualified_table_over_stale_dir(self, spark, points):
+        """`db.table` lives at {warehouse}/{db}.db/{table}: a directory
+        left there by a lost catalog entry must not block an overwrite."""
+        import os
+        from urllib.parse import urlparse
+
+        spark.sql("CREATE DATABASE IF NOT EXISTS test_stale_db")
+        try:
+            db_loc = urlparse(spark.catalog.getDatabase("test_stale_db").locationUri).path
+            os.makedirs(os.path.join(db_loc, "pts"), exist_ok=True)
+            open(os.path.join(db_loc, "pts", "part-00000.parquet"), "w").close()
+            write_bucketed_points(points, "test_stale_db.pts", RADIUS, n_buckets=8)
+            assert spark.table("test_stale_db.pts").count() == points.count()
+        finally:
+            spark.sql("DROP DATABASE IF EXISTS test_stale_db CASCADE")
+
     def test_strategy_fingerprint_mismatch_raises(self, spark, points, bucketed_table):
         """A differently-parameterized strategy can yield the SAME tier
         number while producing disjoint cell encodings — the recorded

@@ -1,9 +1,10 @@
-"""CRS transform tests — web mercator known vectors, Krüger-vs-Snyder
-independent series cross-check, round trips, envelope densification, and
-the Catalyst/numpy twin agreement (CustomCRSKDERasterResizeIT analog)."""
+"""CRS transform tests — web mercator known vectors, the engine's shim
+formulas against the hand-written oracles in crs_oracle.py, Krüger-vs-
+Snyder independent series cross-check, round trips, envelope
+densification, and Catalyst/numpy backend agreement
+(CustomCRSKDERasterResizeIT analog)."""
 
-import math
-
+import crs_oracle
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -12,7 +13,7 @@ from geowave_spark.crs import (
     A_WGS84,
     F_WGS84,
     WEB_MERCATOR_EXTENT,
-    _A1,
+    _parse,
     crs_extent,
     forward_cols,
     inverse_cols,
@@ -34,18 +35,27 @@ def test_web_mercator_known_vectors():
     _, ytop = transform_np(np.array([0.0]), np.array([85.05112877980659]), "EPSG:4326", "EPSG:3857")
     assert abs(ytop[0] - WEB_MERCATOR_EXTENT) < 1e-5
     assert abs(WEB_MERCATOR_EXTENT - 20037508.342789244) < 1e-6
+    # the shim's op order is the hand-written oracle's, clamp included
+    lon = np.array([-179.5, -20.0, 0.0, 33.3, 179.9, 10.0, -10.0])
+    lat = np.array([-84.9, 12.5, 85.06, -89.0, 90.0, -90.0, 60.0])
+    got = transform_np(lon, lat, "EPSG:4326", "EPSG:3857")
+    np.testing.assert_array_equal(got, crs_oracle.webmerc_forward(lon, lat))
+    back = transform_np(*got, "EPSG:3857", "EPSG:4326")
+    np.testing.assert_array_equal(back, crs_oracle.webmerc_inverse(*got))
 
 
 def test_rectifying_radius_constant():
-    # A = a/(1+n)(1+n²/4+n⁴/64) for WGS84 is the published 6367449.1458 m
-    assert abs(_A1 - 6367449.145823415) < 1e-3
+    # A = a/(1+n)(1+n²/4+n⁴/64) for WGS84 is the published 6367449.1458 m,
+    # in the hand-written oracle and in the engine's UTM projection alike
+    assert abs(crs_oracle.A1 - 6367449.145823415) < 1e-3
+    assert abs(_parse("EPSG:32631")[1].A1 - crs_oracle.A1) < 1e-6
 
 
 def _snyder_utm_forward(lon, lat, lon0, fn):
     """Independent transverse-mercator forward — Snyder, 'Map Projections:
     A Working Manual' (USGS PP 1395), eqs. 8-9..8-15 / 3-21: a different
     published series (powers of e² with ν/T/C/A terms) than the Krüger
-    n-series in geowave_spark.crs."""
+    n-series in geowave_spark.crs_conic."""
     a = A_WGS84
     f = F_WGS84
     e2 = f * (2 - f)
@@ -128,16 +138,24 @@ def test_catalyst_matches_numpy_twins(spark):
     import pandas as pd
 
     rng = np.random.default_rng(9)
-    lon = rng.uniform(-179, 179, 500)
-    lat = rng.uniform(-84, 84, 500)
-    df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
-    for crs in ("EPSG:3857", "EPSG:32615"):
-        out = transform_df(df, "EPSG:4326", crs).orderBy("lon").toPandas()
-        ref = np.argsort(lon)
-        xs, ys = transform_np(lon[ref], lat[ref], "EPSG:4326", crs)
+    # random points plus the web-mercator clamp edges and the poles
+    edge = np.array([85.06, -85.06, 89.0, -89.0, 90.0, -90.0])
+    lon = np.concatenate([rng.uniform(-179, 179, 500), np.linspace(-170, 170, 6)])
+    lat = np.concatenate([rng.uniform(-84, 84, 500), edge])
+    df = spark.createDataFrame(pd.DataFrame({"i": np.arange(len(lon)), "lon": lon, "lat": lat}))
+    for crs in ("EPSG:3857", "EPSG:32615", "EPSG:32733"):
+        out = transform_df(df, "EPSG:4326", crs).orderBy("i").toPandas()
+        xs, ys = transform_np(lon, lat, "EPSG:4326", crs)
         # same IEEE formulas, JVM vs numpy: essentially bit-identical
         np.testing.assert_allclose(out["x"].to_numpy(), xs, rtol=1e-13, atol=1e-6)
         np.testing.assert_allclose(out["y"].to_numpy(), ys, rtol=1e-13, atol=1e-6)
+        if crs == "EPSG:3857":  # the clamp: beyond ±85.0511° y is ±a·π
+            np.testing.assert_allclose(
+                out["y"].to_numpy()[-6:], np.sign(edge) * WEB_MERCATOR_EXTENT, rtol=1e-12
+            )
+    # ... and a null latitude stays null instead of clamping to an edge
+    nul = spark.createDataFrame([(None,)], "lat double")
+    assert tuple(nul.select(*forward_cols("EPSG:3857", F.lit(0.0), "lat")).first()) == (0.0, None)
 
 
 def test_inverse_cols_catalyst(spark):
@@ -203,7 +221,7 @@ def test_kde_in_web_mercator_matches_numpy(spark):
 
     nx, ny = 1 << (level + 1), 1 << level
     ext = WEB_MERCATOR_EXTENT
-    x, y = transform_np(lon, lat, "EPSG:4326", "EPSG:3857")
+    x, y = crs_oracle.webmerc_forward(lon, lat)
     px = np.clip(np.floor((x + ext) / (2 * ext) * nx).astype(np.int64), 0, nx - 1)
     py = np.clip(np.floor((y + ext) / (2 * ext) * ny).astype(np.int64), 0, ny - 1)
     want: dict[tuple[int, int], float] = {}

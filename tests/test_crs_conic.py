@@ -11,8 +11,9 @@ generic TM) — oracle strategy:
   closed-form truths from the projection's published definition, not a
   re-run of the code under test.
 * **Cross-implementation checks** — the generic Krüger TM must agree
-  with crs.py's independent fixed-WGS84 UTM path; Catalyst and numpy
-  backends must agree bit-for-bit-ish on random points.
+  with the independent hand-written fixed-WGS84 UTM series in
+  crs_oracle.py; Catalyst and numpy backends must agree bit-for-bit-ish
+  on random points.
 
 Reference parity: geotools CRS.decode + ReferencedEnvelope.transform
 (RasterDataAdapter.java:444-550); formulas from EPSG GN7-2 (public).
@@ -20,6 +21,7 @@ Reference parity: geotools CRS.decode + ReferencedEnvelope.transform
 
 import math
 
+import crs_oracle
 import numpy as np
 import pytest
 
@@ -143,16 +145,19 @@ def test_generic_tmerc_matches_trusted_utm_path():
     rng = np.random.default_rng(3)
     lon = rng.uniform(12.0, 18.0, 400)
     lat = rng.uniform(-75.0, 80.0, 400)
-    x1, y1 = crs.transform_np(lon, lat, "EPSG:4326", "EPSG:32633")
-    x2, y2 = crs.transform_np(
-        lon,
-        lat,
-        "EPSG:4326",
+    tmerc = (
         "+proj=tmerc +lat_0=0 +lon_0=15 +k_0=0.9996 +x_0=500000 +y_0=0"
-        " +ellps=WGS84 +units=m",
+        " +ellps=WGS84 +units=m"
     )
-    assert np.abs(x1 - x2).max() < 1e-6
-    assert np.abs(y1 - y2).max() < 1e-6
+    for code, fn in (("EPSG:32633", 0.0), ("EPSG:32733", 10000000.0), (tmerc, 0.0)):
+        x1, y1 = crs_oracle.utm_forward(lon, lat, 15.0, fn)
+        x2, y2 = crs.transform_np(lon, lat, "EPSG:4326", code)
+        assert np.abs(x1 - x2).max() < 1e-6
+        assert np.abs(y1 - y2).max() < 1e-6
+        lo1, la1 = crs_oracle.utm_inverse(x1, y1, 15.0, fn)
+        lo2, la2 = crs.transform_np(x1, y1, code, "EPSG:4326")
+        assert np.abs(lo1 - lo2).max() < 1e-11
+        assert np.abs(la1 - la2).max() < 1e-11
 
 
 def test_tmerc_nonzero_lat0_origin():

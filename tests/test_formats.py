@@ -585,6 +585,30 @@ class TestGeoJSON:
         assert rows["1"]["wkt"] == "POINT (-3.25 7)"
         assert rows["a1"]["ok"] is True and rows["1"]["frac"] == 1.25
 
+    def test_long_column_rejects_fractional_later_value(self, spark, tmp_path):
+        """A long-probed property that meets 3.7 (or text) in a later
+        file raises a ValueError naming the key instead of truncating."""
+        import json
+
+        from geowave_spark.sources.formats import read_geojson
+
+        def read(later):
+            d = tmp_path / str(len(list(tmp_path.iterdir())))
+            d.mkdir()
+            for name, vals in (("a.geojson", [120, 7]), ("b.geojson", [later])):
+                feats = [
+                    {"type": "Feature", "geometry": {"type": "Point", "coordinates": [0, 0]},
+                     "properties": {"pop": v}}
+                    for v in vals
+                ]
+                (d / name).write_text(json.dumps({"type": "FeatureCollection", "features": feats}))
+            return sorted(r["pop"] for r in read_geojson(spark, str(d)).collect())
+
+        assert read(4.0) == [4, 7, 120]  # an integral float is still exact
+        for bad in (3.7, "3"):
+            with pytest.raises(Exception, match="GeoJSON property 'pop' was probed as long"):
+                read(bad)
+
     def test_geojson_seq_splittable_path(self, spark, tmp_path):
         import json
 

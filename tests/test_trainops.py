@@ -137,13 +137,22 @@ class TestSimilarity:
         assert got == want
 
     def test_catalyst_path_matches_numpy_path(self, spark, emb):
-        q = emb.where(F.col("vec_id") < 4)
-        a = {
-            tuple(r)
-            for r in brute_topk(q, emb, k=3, exclude_self=True, catalyst=True).collect()
-        }
-        b = {tuple(r) for r in brute_topk(q, emb, k=3, exclude_self=True).collect()}
-        assert a == b
+        # plus one all-zero vector: its cosine is 0.0 on both paths (no
+        # ANSI divide-by-zero, no NaN), so it ranks by the id tie-break
+        corpus = emb.unionByName(spark.createDataFrame([(999, [0.0] * 32)], emb.schema))
+        q = corpus.where((F.col("vec_id") < 4) | (F.col("vec_id") == 999))
+        a, b = (
+            {
+                tuple(r)
+                for r in brute_topk(
+                    q, corpus, k=3, exclude_self=True, catalyst=cat, include_sim=True
+                ).collect()
+            }
+            for cat in (True, False)
+        )
+        assert {r[:3] for r in a} == {r[:3] for r in b}
+        for rows in (a, b):
+            assert {r[1:] for r in rows if r[0] == 999} == {(0, 1, 0.0), (1, 2, 0.0), (2, 3, 0.0)}
 
     def test_ivf_recall(self, spark, emb, emb_pdf):
         q = emb.where(F.col("vec_id") < 20)
