@@ -747,14 +747,20 @@ def geom_pair_join(
     the coarse cell phase is unchanged because every one of these
     relations implies envelope intersection.
 
-    Plan: both sides cell-explode (build side at its natural tiers with
-    trimIndexIds pruning; probe side re-covered at each distinct build
-    tier), one shuffled hash equi-join on (tier, cell), exact kind-aware
-    pair predicate, dropDuplicates (a pair CAN meet in several cells here
-    because both sides span cell ranges — the reference's reduceByKey
-    dedupe is genuinely needed, TieredSpatialJoin.java:349).
+    Plan: each side gets its natural tier (finest tier with at most
+    ``max_duplicates`` envelope cells; the build side's envelope grows by
+    the radius) and is covered at every tier of either side's tier set
+    that is no finer than its own, so each row emits at most
+    |tiers|·``max_duplicates`` cells.  A pair meets only at the coarser of
+    its two natural tiers (the reference's reprojection of the finer side
+    onto the coarser tier, TieredSpatialJoin.java:471-511); covering the
+    coarse side at the fine side's tier instead would grow with the square
+    of the tier gap.  One shuffled hash equi-join on (tier, cell), the
+    exact kind-aware pair predicate, then dropDuplicates (a pair can share
+    several cells because both sides span cell ranges — the reference's
+    reduceByKey dedupe, TieredSpatialJoin.java:349).
 
-    Scale: shuffle volume is |left|·dup + |right|·dup·|tiers| rows of
+    Scale: shuffle volume is (|left| + |right|)·|tiers|·dup rows of
     (id, WKT); no driver geometry collect; the exact stage factorizes the
     build WKT per Arrow batch so each distinct geometry parses once per
     batch.
@@ -764,33 +770,35 @@ def geom_pair_join(
             "predicate joins take no radius (use radius= for within-distance)"
         )
     buffer = radius or 0.0
-    build = explode_polygon_cells(
-        right.select(F.col(right_id).alias("_gid"), F.col(right_wkt).alias("_gwkt")),
-        "_gwkt",
-        keep=["_gid", "_gwkt"],
-        strategy=strategy,
-        max_duplicates=max_duplicates,
-        buffer=buffer,
-    )
-    tiers = distinct_polygon_tiers(
-        right, right_wkt, strategy, max_duplicates=max_duplicates, buffer=buffer
+    build_src = right.select(
+        F.col(right_id).alias("_gid"), F.col(right_wkt).alias("_gwkt")
     )
     probe_src = left.select(
         F.col(left_id).alias("_pid"), F.col(left_wkt).alias("_pwkt")
     )
-    probe = None
-    for t in tiers:
-        # cover the probe envelope with cells at this build tier (unbuffered:
-        # only one side of a within-distance join needs the buffer,
-        # TieredSpatialJoin.java:146-166)
-        part = _explode_wkt_envelope_cells(probe_src, "_pwkt", ["_pid", "_pwkt"], strategy, t)
-        probe = part if probe is None else probe.unionByName(part)
-    if probe is None:
+    tiers = sorted(
+        set(
+            distinct_polygon_tiers(
+                right, right_wkt, strategy, max_duplicates=max_duplicates, buffer=buffer
+            )
+        )
+        | set(distinct_polygon_tiers(left, left_wkt, strategy, max_duplicates=max_duplicates))
+    )
+    if not tiers:
         return probe_src.select(
             F.col("_pid").alias(left_id)
         ).limit(0).crossJoin(right.select(F.col(right_id).alias(right_id)).limit(0))
+    # the build side alone carries the within-distance buffer
+    # (TieredSpatialJoin.java:146-166)
+    build = _explode_wkt_tier_cells(
+        build_src, "_gwkt", "_gtier", strategy, tiers, max_duplicates, buffer
+    )
+    probe = _explode_wkt_tier_cells(
+        probe_src, "_pwkt", "_ptier", strategy, tiers, max_duplicates
+    )
     return (
         probe.join(build.hint("shuffle_hash"), ["tier", "cell"])
+        .where(F.least("_ptier", "_gtier") == F.col("tier"))
         .where(
             _geom_pair_match_udf(radius, predicate)(
                 F.col("_pwkt"), F.col("_gwkt")
@@ -801,17 +809,28 @@ def geom_pair_join(
     )
 
 
-def _explode_wkt_envelope_cells(
-    df: DataFrame, wkt_col: str, keep: list[str], strategy: TieredStrategy, tier: int
+def _explode_wkt_tier_cells(
+    df: DataFrame,
+    wkt_col: str,
+    tier_col: str,
+    strategy: TieredStrategy,
+    tiers: list[int],
+    max_duplicates: int,
+    buffer: float = 0.0,
 ) -> DataFrame:
-    """Explode each WKT row to the cells covering its envelope at one fixed
-    tier (flat mapInPandas, object-free Arrow exchange)."""
+    """Explode each WKT row to the cells covering its (buffered) envelope at
+    every tier of ``tiers`` no finer than the row's natural tier, which
+    rides along in ``tier_col`` (flat mapInPandas, object-free Arrow
+    exchange)."""
     from pyspark.sql.types import IntegerType, LongType
 
-    src = df.select(*[F.col(c) for c in keep])
     out_schema = StructType(
-        [src.schema[c] for c in keep]
-        + [StructField("tier", IntegerType()), StructField("cell", LongType())]
+        list(df.schema.fields)
+        + [
+            StructField(tier_col, IntegerType()),
+            StructField("tier", IntegerType()),
+            StructField("cell", LongType()),
+        ]
     )
 
     def _gen(batches):
@@ -823,15 +842,21 @@ def _explode_wkt_envelope_cells(
             for i, w in enumerate(wkts):
                 c = np.vstack(flatten_parts(parse_wkt_multi(w)))
                 env[i] = (c[:, 0].min(), c[:, 1].min(), c[:, 0].max(), c[:, 1].max())
-            row, cell = strategy.envelope_cells_at_tier(
-                env[:, 0], env[:, 1], env[:, 2], env[:, 3], tier
-            )
-            out = pdf.iloc[row].reset_index(drop=True)
-            out["tier"] = np.full(len(row), tier, dtype=np.int32)
-            out["cell"] = cell
-            yield out
+            env[:, :2] -= buffer
+            env[:, 2:] += buffer
+            own = strategy.envelope_tiers(*env.T, max_duplicates=max_duplicates)
+            for t in tiers:
+                sel = np.nonzero(own >= t)[0]
+                if not len(sel):
+                    continue
+                row, cell = strategy.envelope_cells_at_tier(*env[sel].T, t)
+                out = pdf.iloc[sel[row]].reset_index(drop=True)
+                out[tier_col] = own[sel[row]].astype(np.int32)
+                out["tier"] = np.full(len(row), t, dtype=np.int32)
+                out["cell"] = cell
+                yield out
 
-    return src.mapInPandas(_gen, out_schema)
+    return df.mapInPandas(_gen, out_schema)
 
 
 def _geom_pair_match_udf(radius: float | None, predicate: str | None = None):
