@@ -81,9 +81,10 @@ CATALYST_OPS = SimpleNamespace(
     exp=F.exp,
     pow=F.pow,
     where=lambda c, a, b: F.when(c, a).otherwise(b),
-    # null and NaN pass through as in np.clip: greatest() alone would
-    # skip a null (→ lo) and Spark orders NaN above hi
-    clip=lambda x, lo, hi: F.when(x.isNull() | F.isnan(x), x).otherwise(
+    clip=lambda x, lo, hi: F.least(F.greatest(x, F.lit(lo)), F.lit(hi)),
+    # for raw input columns only (x appears 4 times): null and NaN pass as
+    # in np.clip, where greatest() skips a null and Spark sorts NaN above hi
+    clip_input=lambda x, lo, hi: F.when(x.isNull() | F.isnan(x), x).otherwise(
         F.least(F.greatest(x, F.lit(lo)), F.lit(hi))
     ),
     mod=lambda x, m: F.pmod(x, F.lit(m)),
@@ -105,6 +106,7 @@ NUMPY_OPS = SimpleNamespace(
     pow=np.power,
     where=np.where,
     clip=np.clip,
+    clip_input=np.clip,
     mod=np.mod,
 )
 
@@ -417,7 +419,7 @@ class MercatorSpherical(_Proj):
     MAX_LAT = math.degrees(math.atan(math.sinh(math.pi)))  # 85.05112877980659
 
     def forward(self, o, lon_deg, lat_deg):
-        lat = o.clip(lat_deg, -self.MAX_LAT, self.MAX_LAT)
+        lat = o.clip_input(lat_deg, -self.MAX_LAT, self.MAX_LAT)
         y = o.log(o.tan(math.pi / 4.0 + lat * D2R / 2.0)) * self.a
         return lon_deg * D2R * self.a, y
 

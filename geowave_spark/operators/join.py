@@ -747,58 +747,31 @@ def geom_pair_join(
     the coarse cell phase is unchanged because every one of these
     relations implies envelope intersection.
 
-    Plan: each side gets its natural tier (finest tier with at most
-    ``max_duplicates`` envelope cells; the build side's envelope grows by
-    the radius) and is covered at every tier of either side's tier set
-    that is no finer than its own, so each row emits at most
-    |tiers|·``max_duplicates`` cells.  A pair meets only at the coarser of
-    its two natural tiers (the reference's reprojection of the finer side
-    onto the coarser tier, TieredSpatialJoin.java:471-511); covering the
-    coarse side at the fine side's tier instead would grow with the square
-    of the tier gap.  One shuffled hash equi-join on (tier, cell), the
-    exact kind-aware pair predicate, then dropDuplicates (a pair can share
-    several cells because both sides span cell ranges — the reference's
-    reduceByKey dedupe, TieredSpatialJoin.java:349).
-
-    Scale: shuffle volume is (|left| + |right|)·|tiers|·dup rows of
-    (id, WKT); no driver geometry collect; the exact stage factorizes the
-    build WKT per Arrow batch so each distinct geometry parses once per
-    batch.
+    Plan: each side sits at its natural tier (finest tier with at most
+    ``max_duplicates`` envelope cells; only the build envelope grows by
+    the radius, TieredSpatialJoin.java:146-166).  A pair meets once, at
+    the coarser of its two tiers, in the coarser side's own cells, which
+    the finer side covers with its envelope (the reference's
+    reprojection of the finer side, TieredSpatialJoin.java:471-511).  A
+    ``role`` key (0: build coarser or level, 1: probe strictly coarser)
+    keeps two covering rows from meeting, so a world-spanning geometry
+    pairs once with each row of the other side; a level pair meets in
+    both sides' own cells.  One shuffled hash join on (role, tier, cell),
+    the exact kind-aware predicate, then dropDuplicates (a pair can share
+    several cells — the reference's reduceByKey dedupe,
+    TieredSpatialJoin.java:349).  Each row emits at most (1 + |other
+    side's tiers|)·dup cells; no driver geometry collect.
     """
     if predicate is not None and radius is not None:
         raise ValueError(
             "predicate joins take no radius (use radius= for within-distance)"
         )
-    buffer = radius or 0.0
-    build_src = right.select(
-        F.col(right_id).alias("_gid"), F.col(right_wkt).alias("_gwkt")
-    )
-    probe_src = left.select(
-        F.col(left_id).alias("_pid"), F.col(left_wkt).alias("_pwkt")
-    )
-    tiers = sorted(
-        set(
-            distinct_polygon_tiers(
-                right, right_wkt, strategy, max_duplicates=max_duplicates, buffer=buffer
-            )
-        )
-        | set(distinct_polygon_tiers(left, left_wkt, strategy, max_duplicates=max_duplicates))
-    )
-    if not tiers:
-        return probe_src.select(
-            F.col("_pid").alias(left_id)
-        ).limit(0).crossJoin(right.select(F.col(right_id).alias(right_id)).limit(0))
-    # the build side alone carries the within-distance buffer
-    # (TieredSpatialJoin.java:146-166)
-    build = _explode_wkt_tier_cells(
-        build_src, "_gwkt", "_gtier", strategy, tiers, max_duplicates, buffer
-    )
-    probe = _explode_wkt_tier_cells(
-        probe_src, "_pwkt", "_ptier", strategy, tiers, max_duplicates
-    )
     return (
-        probe.join(build.hint("shuffle_hash"), ["tier", "cell"])
-        .where(F.least("_ptier", "_gtier") == F.col("tier"))
+        _geom_pair_candidates(
+            left.select(F.col(left_id).alias("_pid"), F.col(left_wkt).alias("_pwkt")),
+            right.select(F.col(right_id).alias("_gid"), F.col(right_wkt).alias("_gwkt")),
+            radius or 0.0, strategy, max_duplicates,
+        )
         .where(
             _geom_pair_match_udf(radius, predicate)(
                 F.col("_pwkt"), F.col("_gwkt")
@@ -809,52 +782,75 @@ def geom_pair_join(
     )
 
 
-def _explode_wkt_tier_cells(
+def _geom_pair_candidates(
+    probe: DataFrame,
+    build: DataFrame,
+    buffer: float,
+    strategy: TieredStrategy,
+    max_duplicates: int,
+) -> DataFrame:
+    """Cell-join phase of :func:`geom_pair_join` over (_pid, _pwkt) ×
+    (_gid, _gwkt): one row per candidate pair and shared cell."""
+    probe_tiers = distinct_polygon_tiers(probe, "_pwkt", strategy, max_duplicates)
+    build_tiers = distinct_polygon_tiers(build, "_gwkt", strategy, max_duplicates, buffer)
+    return _explode_pair_cells(
+        probe, "_pwkt", 1, build_tiers, strategy, max_duplicates
+    ).join(
+        _explode_pair_cells(
+            build, "_gwkt", 0, probe_tiers, strategy, max_duplicates, buffer
+        ).hint("shuffle_hash"),
+        ["role", "tier", "cell"],
+    )
+
+
+def _explode_pair_cells(
     df: DataFrame,
     wkt_col: str,
-    tier_col: str,
+    role: int,
+    cover_tiers: list[int],
     strategy: TieredStrategy,
-    tiers: list[int],
     max_duplicates: int,
     buffer: float = 0.0,
 ) -> DataFrame:
-    """Explode each WKT row to the cells covering its (buffered) envelope at
-    every tier of ``tiers`` no finer than the row's natural tier, which
-    rides along in ``tier_col`` (flat mapInPandas, object-free Arrow
+    """Explode each WKT row to the cells covering its (buffered) envelope
+    at its natural tier, tagged ``role``, and at each tier of
+    ``cover_tiers`` coarser than its own, tagged with the other role.
+    Level pairs meet own cell to own cell under role 0, so role-1 rows
+    repeat their own cells there (flat mapInPandas, object-free Arrow
     exchange)."""
     from pyspark.sql.types import IntegerType, LongType
 
     out_schema = StructType(
         list(df.schema.fields)
-        + [
-            StructField(tier_col, IntegerType()),
-            StructField("tier", IntegerType()),
-            StructField("cell", LongType()),
-        ]
+        + [StructField(c, IntegerType()) for c in ("role", "tier")]
+        + [StructField("cell", LongType())]
     )
 
     def _gen(batches):
         from ..geom import flatten_parts, parse_wkt_multi
 
         for pdf in batches:
-            wkts = pdf[wkt_col]
-            env = np.empty((len(wkts), 4), dtype=np.float64)
-            for i, w in enumerate(wkts):
-                c = np.vstack(flatten_parts(parse_wkt_multi(w)))
-                env[i] = (c[:, 0].min(), c[:, 1].min(), c[:, 0].max(), c[:, 1].max())
-            env[:, :2] -= buffer
-            env[:, 2:] += buffer
+            env = np.array([
+                (c[:, 0].min(), c[:, 1].min(), c[:, 0].max(), c[:, 1].max())
+                for c in (np.vstack(flatten_parts(parse_wkt_multi(w))) for w in pdf[wkt_col])
+            ]).reshape(-1, 4) + [-buffer, -buffer, buffer, buffer]
             own = strategy.envelope_tiers(*env.T, max_duplicates=max_duplicates)
-            for t in tiers:
-                sel = np.nonzero(own >= t)[0]
-                if not len(sel):
-                    continue
+
+            def cells(mask, t, tag):
+                sel = np.nonzero(mask)[0]
                 row, cell = strategy.envelope_cells_at_tier(*env[sel].T, t)
                 out = pdf.iloc[sel[row]].reset_index(drop=True)
-                out[tier_col] = own[sel[row]].astype(np.int32)
+                out["role"] = np.full(len(row), tag, dtype=np.int32)
                 out["tier"] = np.full(len(row), t, dtype=np.int32)
                 out["cell"] = cell
-                yield out
+                return out
+
+            for t in np.unique(own):
+                yield cells(own == t, t, role)
+            for t in cover_tiers:
+                yield cells(own > t, t, 1 - role)
+                if role == 1:
+                    yield cells(own == t, t, 0)
 
     return df.mapInPandas(_gen, out_schema)
 

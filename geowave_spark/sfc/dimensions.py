@@ -72,8 +72,6 @@ def split_dateline(lo: np.ndarray, hi: np.ndarray) -> list[tuple[np.ndarray, np.
 
 # --- temporal binning (YEAR periodicity default, SpatialTemporalOptions.java:18)
 
-_MS_PER_DAY = 86_400_000
-
 
 def temporal_bin_year(epoch_ms: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Epoch millis → (year bin id, normalized position in year [0,1)).

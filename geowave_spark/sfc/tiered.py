@@ -26,7 +26,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .dimensions import LATITUDE, LONGITUDE, Dimension
-from .hilbert import MAX_BITS, xy_to_hilbert
+from .hilbert import xy_to_hilbert
 
 DEFAULT_MAX_BITS = 31
 # reference: GeoWaveIndexedRDD.java:119,193 — spark join uses 80 duplicates
@@ -168,7 +168,7 @@ class TieredStrategy:
         cnt = cnx * (b_y - a_y + 1)
         n = a_x.shape[0]
         row = np.repeat(np.arange(n, dtype=np.int64), cnt)
-        starts = np.concatenate(([0], np.cumsum(cnt)[:-1]))
+        starts = np.cumsum(cnt) - cnt
         off = np.arange(cnt.sum(), dtype=np.int64) - np.repeat(starts, cnt)
         ix = a_x[row] + off % cnx[row]
         iy = a_y[row] + off // cnx[row]

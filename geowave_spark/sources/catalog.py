@@ -24,8 +24,6 @@ lets an auditor verify a resumed table matches a from-scratch one.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 

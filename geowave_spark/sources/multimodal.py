@@ -24,7 +24,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 AUDIO_SCHEMA = (
     "audio_id string, bytes binary, sample_rate int, n_samples int, "

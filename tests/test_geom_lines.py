@@ -13,13 +13,18 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from geowave_spark.encode import DEFAULT_STRATEGY
 from geowave_spark.geom import (
     GeomBatch,
     parse_wkt_multi,
     points_geoms_dist2_batch,
     points_intersect_geoms_batch,
 )
-from geowave_spark.operators.join import geom_pair_join, geometry_distance_join
+from geowave_spark.operators.join import (
+    _geom_pair_candidates,
+    geom_pair_join,
+    geometry_distance_join,
+)
 from geowave_spark.sources.fixtures import points_pdf, tracks_pdf
 
 
@@ -301,6 +306,25 @@ class TestGeomPairJoin:
         ii, jj = np.nonzero(d2 <= r * r)
         want = {(ra["gid"].iloc[i], rb["gid"].iloc[j]) for i, j in zip(ii, jj)}
         assert got == want
+
+    def test_world_polygon_candidates_stay_linear(self, spark, ra, rb):
+        """A world polygon on each side pairs once with every row of the
+        other side; rows that only cover its tier-0 cell never meet."""
+        w = ("world", "POLYGON ((-180 -90, 180 -90, 180 90, -180 90, -180 -90))",
+             -180.0, -90.0, 180.0, 90.0)
+        wa, wb = (pd.concat([r, pd.DataFrame([w], columns=r.columns)], ignore_index=True)
+                  for r in (ra, rb))
+        da = spark.createDataFrame(wa[["gid", "wkt"]]).toDF("aid", "wkt")
+        db = spark.createDataFrame(wb[["gid", "wkt"]]).toDF("bid", "wkt")
+        # max_duplicates=4 puts each world polygon at tier 1 (2 × 2 cells)
+        cand = _geom_pair_candidates(da.toDF("_pid", "_pwkt"), db.toDF("_gid", "_gwkt"),
+                                     0.0, DEFAULT_STRATEGY, 4).count()
+        # the world pairs alone are len(wa) + len(wb) - 1; covering rows
+        # meeting at tier 0 would make it len(wa) * len(wb)
+        assert cand < 3 * (len(wa) + len(wb)), cand
+        got = {tuple(r) for r in geom_pair_join(da, db, "aid", "bid", max_duplicates=4).collect()}
+        ii, jj = np.nonzero(self._rect_d2(wa, wb) == 0.0)
+        assert got == {(wa["gid"].iloc[i], wb["gid"].iloc[j]) for i, j in zip(ii, jj)}
 
     def test_line_polygon_intersects(self, spark, ra):
         """Tracks × rectangles: oracle is the brute segment-vs-rect clip
