@@ -45,6 +45,7 @@ from geowave_spark.operators.text import (
     quality_features,
     token_count,
 )
+from geowave_spark.session import cache_per_call
 
 # ---- deterministic spatial derivations (identical text in Spark & DuckDB)
 
@@ -762,12 +763,6 @@ def q_temporal_predicates(spark, sf_dir):
 
 PHASH_N = 1200  # images in the phash near-dup gate (oracle pinned to it)
 
-# class tables persisted by earlier q_phash_neardup calls; unpersisted on
-# the next call so repeated driver invocations never accumulate cached
-# blocks in a long-lived session
-_PHASH_CLASS_CACHE: list = []
-
-
 def q_phash_neardup(spark, sf_dir):
     """Image near-duplicate detection by 64-bit perceptual hash over the
     input-hint images table (driver-brief image axis; the reference has
@@ -783,18 +778,15 @@ def q_phash_neardup(spark, sf_dir):
     from geowave_spark.sources.images import images_table
 
     ensure_py_files(spark)
-    while _PHASH_CLASS_CACHE:
-        _PHASH_CLASS_CACHE.pop().unpersist()
-    classes = (
+    # the class table is referenced four times downstream (two band-join
+    # sides, two size join-backs); without persist each reference
+    # regenerates + rehashes every image.  The next call releases it.
+    classes = cache_per_call(
+        "q_phash_neardup",
         images_table(spark, PHASH_N)
         .groupBy(F.col("phash").alias("_sig"))
-        .agg(F.min("image_id").alias("_id"), F.count(F.lit(1)).alias("cnt"))
-        # the class table is referenced four times downstream (two band-join
-        # sides, two size join-backs); without persist each reference
-        # regenerates + rehashes every image
-        .persist()
+        .agg(F.min("image_id").alias("_id"), F.count(F.lit(1)).alias("cnt")),
     )
-    _PHASH_CLASS_CACHE.append(classes)
     pairs = hamming_pairs(
         classes.select("_id", "_sig"), max_hamming=4, blocks_per_key=2
     )

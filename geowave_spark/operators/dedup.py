@@ -5,11 +5,12 @@ Training-data-pipeline operators (driver brief).  Design for 100 TB:
 - exact: hash-groupBy on md5(text) — one shuffle, partial agg on the hash,
   never materializes pairwise anything.
 - MinHash+LSH: shingle → k minhashes (vectorized numpy multiply-shift
-  hashing in one Arrow batch) → band signatures → *self-join on band
-  bucket* (equi hash join; candidate pairs only within a bucket) → exact
-  Jaccard verify on candidates.  Bucket join is the only quadratic-risk
-  step and is bounded by bucket size; a salt/cap column guards pathological
-  buckets.
+  hashing in one Arrow batch) → band keys → :func:`_first_band_pairs`,
+  the id-only candidate kernel shared with cosine near-dup (one equi-join
+  on band key, each pair kept in its first agreeing band, no dedupe
+  exchange) → signatures, then texts, fetched by id for the candidates
+  only → exact Jaccard verify.  Over-``max_bucket`` buckets are dropped
+  (and reported) before the join.
 - SimHash: 64-bit signature via sign-sum of token hashes; near-dups =
   pairs within Hamming distance d, found by the standard pigeonhole trick
   (split signature into d+1 chunks, equi-join on any equal chunk).
@@ -18,11 +19,15 @@ Training-data-pipeline operators (driver brief).  Design for 100 TB:
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType
+
+from geowave_spark.session import cache_per_call
 
 _MERSENNE = (1 << 61) - 1
 
@@ -70,6 +75,28 @@ def minhash_udf(num_hashes: int = 64, shingle: int = 3, seed: int = 42):
     return _mh
 
 
+def _first_band_pairs(keys: DataFrame, bands: int) -> DataFrame:
+    """Each distinct ``(id_a, id_b)``, ``id_a < id_b``, agreeing on at
+    least one band key, exactly once: the shared LSH candidate kernel.
+
+    ``keys``: ``_id`` and ``_keys`` (array<long>, one key per band; a null
+    key never matches).  One id-only equi-join on (band, key), then the
+    first-matching-band filter of :func:`imagedup.hamming_pairs` in its
+    compact form (per-band equality terms + ``array_position``).
+    ``posexplode_outer`` infers no ``size(_keys) > 0`` filter, so a UDF
+    computing ``_keys`` runs once per join leg."""
+    ex = keys.select("_id", "_keys", F.posexplode_outer("_keys").alias("band", "bkey"))
+    a = ex.select(F.col("_id").alias("id_a"), F.col("_keys").alias("_ka"), "band", "bkey")
+    b = ex.select(F.col("_id").alias("id_b"), F.col("_keys").alias("_kb"), "band", "bkey")
+    match = ", ".join(f"_ka[{i}] = _kb[{i}]" for i in range(bands))
+    return (
+        a.join(b, ["band", "bkey"])
+        .where(F.col("id_a") < F.col("id_b"))
+        .where(F.expr(f"band = array_position(array({match}), true) - 1"))
+        .select("id_a", "id_b")
+    )
+
+
 def minhash_lsh_dedup(
     df: DataFrame,
     threshold: float = 0.7,
@@ -82,70 +109,49 @@ def minhash_lsh_dedup(
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard ≥ threshold).
 
-    shingle→minhash→band→bucket-join→exact-Jaccard verify.  Bucket join is
-    an equi join on (band, band_hash); buckets larger than ``max_bucket``
-    (degenerate content — boilerplate/empty docs — whose all-pairs cost is
-    quadratic) are dropped, and the drop is REPORTED: a warning carries
-    the dropped-bucket count and covered row count (silent truncation is
-    not allowed at scale).
+    Buckets larger than ``max_bucket`` (degenerate content — boilerplate
+    or empty docs — whose all-pairs cost is quadratic) are dropped, and
+    the drop is REPORTED in a warning with the bucket and row counts.  A
+    dropped bucket's key is nulled, so a pair that also agrees in a later
+    band is still found there.
     """
     rows_per_band = num_hashes // bands
-    sig = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(text).alias("_text"),
-        minhash_udf(num_hashes, shingle)(F.col(text)).alias("_sig"),
-    ).cache()
-
-    bands_df = sig.select(
-        "_id",
-        "_sig",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.xxhash64(F.slice("_sig", i * rows_per_band + 1, rows_per_band)),
-            )
-        ).alias("band", "bucket"),
+    sig = cache_per_call(
+        "minhash_lsh_dedup",
+        df.select(
+            F.col(id_col).alias("_id"),
+            minhash_udf(num_hashes, shingle)(F.col(text)).alias("_sig"),
+        ),
     )
+    band_keys = [
+        F.xxhash64(F.slice("_sig", b * rows_per_band + 1, rows_per_band))
+        for b in range(bands)
+    ]
     # bound pathological buckets — and report what was dropped
-    sizes = bands_df.groupBy("band", "bucket").count()
-    over = sizes.where(F.col("count") > max_bucket).cache()
-    stats = over.agg(
-        F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("count"), F.lit(0)).alias("rows")
-    ).first()
-    if stats["n"]:
-        import warnings
-
+    sizes = sig.select(F.posexplode(F.array(*band_keys)).alias("band", "bucket"))
+    over = sizes.groupBy("band", "bucket").count().where(F.col("count") > max_bucket).collect()
+    if over:
         warnings.warn(
-            f"minhash_lsh_dedup: dropped {stats['n']} over-limit bucket(s) "
-            f"covering {stats['rows']} band rows (max_bucket={max_bucket}); "
-            "pairs within them are not examined",
+            f"minhash_lsh_dedup: dropped {len(over)} over-limit bucket(s) "
+            f"covering {sum(r['count'] for r in over)} band rows "
+            f"(max_bucket={max_bucket}); pairs within them are not examined",
             stacklevel=2,
         )
-    bands_df = bands_df.join(
-        F.broadcast(over).select("band", "bucket", F.lit(True).alias("_over")),
-        ["band", "bucket"],
-        "left",
-    ).where(F.col("_over").isNull()).drop("_over")
-
-    a = bands_df.select(F.col("_id").alias("id_a"), F.col("_sig").alias("_sig_a"), "band", "bucket")
-    b = bands_df.select(F.col("_id").alias("id_b"), F.col("_sig").alias("_sig_b"), "band", "bucket")
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "_sig_a", "_sig_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    dropped = [[r["bucket"] for r in over if r["band"] == b] for b in range(bands)]
+    nulled = [F.when(~k.isin(d), k) for k, d in zip(band_keys, dropped)]
+    keys = sig.select("_id", F.array(*nulled).alias("_keys"))
     # estimated jaccard from signature agreement, then exact verify
     est = (
         F.size(F.filter(F.zip_with("_sig_a", "_sig_b", lambda x, y: x == y), lambda v: v))
         / F.lit(num_hashes)
     )
-    cand = cand.withColumn("est_jaccard", est).where(F.col("est_jaccard") >= threshold * 0.5)
-
-    texts = df.select(F.col(id_col).alias("_tid"), F.col(text).alias("_t"))
     cand = (
-        cand.join(texts.withColumnRenamed("_tid", "id_a").withColumnRenamed("_t", "_ta"), "id_a")
-        .join(texts.withColumnRenamed("_tid", "id_b").withColumnRenamed("_t", "_tb"), "id_b")
+        _first_band_pairs(keys, bands)
+        .join(sig.select(F.col("_id").alias("id_a"), F.col("_sig").alias("_sig_a")), "id_a")
+        .join(sig.select(F.col("_id").alias("id_b"), F.col("_sig").alias("_sig_b")), "id_b")
+        .where(est >= threshold * 0.5)
+        .join(df.select(F.col(id_col).alias("id_a"), F.col(text).alias("_ta")), "id_a")
+        .join(df.select(F.col(id_col).alias("id_b"), F.col(text).alias("_tb")), "id_b")
     )
 
     @F.pandas_udf(DoubleType())
@@ -204,10 +210,10 @@ def simhash_udf(shingle: int = 2, seed: int = 7):
 
     @F.pandas_udf(LongType())
     def _sh(texts: pd.Series) -> pd.Series:
-        # whole-batch vectorization (round-2 verdict minor #4): concatenate
-        # every text's shingle hashes, expand to a (S_total, 64) ±1 bit
-        # matrix once, and segment-sum per document with add.reduceat —
-        # no per-row Python beyond the string decode itself
+        # whole-batch vectorization: concatenate every text's shingle
+        # hashes, expand to a (S_total, 64) ±1 bit matrix once, and
+        # segment-sum per document with add.reduceat — no per-row Python
+        # beyond the string decode itself
         if not len(texts):
             return pd.Series(np.zeros(0, dtype=np.int64))
         shs = [_shingles(t or "", shingle) for t in texts]  # each ≥1 hash
@@ -243,7 +249,8 @@ def simhash_pairs(
     :func:`imagedup.hamming_pairs`)."""
     from geowave_spark.operators.imagedup import hamming_pairs
 
-    sig = df.select(
-        F.col(id_col).alias("_id"), simhash_udf()(F.col(text)).alias("_sig")
-    ).cache()
+    sig = cache_per_call(
+        "simhash_pairs",
+        df.select(F.col(id_col).alias("_id"), simhash_udf()(F.col(text)).alias("_sig")),
+    )
     return hamming_pairs(sig, max_hamming, blocks_per_key=blocks_per_key)

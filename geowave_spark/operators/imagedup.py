@@ -27,7 +27,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-__all__ = ["phash_from_pixels", "phash_udf", "hamming_pairs", "image_phash_neardup"]
+from geowave_spark.session import cache_per_call
+
+__all__ = ["phash_from_grids", "phash_udf", "hamming_pairs", "image_phash_neardup"]
 
 
 def _dct_mat(n: int) -> np.ndarray:
@@ -89,9 +91,9 @@ def phash_from_grids(grids: np.ndarray) -> np.ndarray:
 
     One einsum-shaped DCT over the whole stack (``C @ G @ Cᵀ`` broadcast
     across B), one row-wise median, one ``np.packbits`` — zero per-image
-    Python after the decode loop.  Bit layout matches
-    :func:`phash_from_pixels`: coefficient i (DC dropped) lands at bit
-    62−i; bit 63 is the always-zero DC slot."""
+    Python after the decode loop.  Coefficient i of the 8×8 low band (DC
+    dropped, so overall brightness flips no bit) lands at bit 62−i; bit
+    63 is the always-zero DC slot."""
     b = len(grids)
     f = np.matmul(np.matmul(_C32, grids), _C32.T)
     coeffs = f[:, :8, :8].reshape(b, 64)[:, 1:]  # drop DC
@@ -101,27 +103,6 @@ def phash_from_grids(grids: np.ndarray) -> np.ndarray:
     be = np.packbits(bits, axis=1).reshape(b, 8).view(">u8").ravel()
     # value-preserving to native uint64, then bit-reinterpret to signed
     return be.astype(np.uint64).view(np.int64)
-
-
-def phash_from_pixels(px: np.ndarray) -> int:
-    """Classic DCT pHash of one decoded image, as a signed 64-bit int.
-
-    Luminance → 32×32 area mean → DCT-II → the 8×8 low-frequency
-    corner, DC dropped → each of the remaining 63 coefficients
-    thresholded against their median (bit 63 of the packed hash is the
-    always-zero DC slot, keeping the layout a stable 64-bit word).
-
-    Scalar loop kept deliberately independent of :func:`phash_from_grids`
-    so the tests can cross-check the batched path against it."""
-    f = _C32 @ _luma_grid_32(px) @ _C32.T
-    low = f[:8, :8].ravel()
-    coeffs = low[1:]  # drop DC: overall brightness must not flip bits
-    bits = coeffs > np.median(coeffs)
-    v = np.uint64(0)
-    for bit in bits.tolist():
-        v = (v << np.uint64(1)) | np.uint64(bit)
-    iv = int(v)
-    return iv - (1 << 64) if iv >= (1 << 63) else iv
 
 
 def phash_udf(bytes_col: str = "bytes", fmt_col: str = "fmt"):
@@ -212,19 +193,12 @@ def hamming_pairs(
         F.col("_id").alias("id_b"), F.col("_sig").alias("_sb"), "band", "bkey"
     )
     # first-matching-band dedup (Norouzi MIH's duplicate-candidate
-    # elimination): a pair agreeing on several bands would surface once
-    # per band; instead of shuffling every candidate row through
-    # dropDuplicates, keep a candidate only in the FIRST band whose keys
-    # agree (r5 — replaces the dropDuplicates exchange, the most
-    # expensive stage of the pairing join, with a codegen filter; each
-    # distinct pair survives exactly once, so the row set is unchanged).
-    # Kept COMPACT on purpose: k per-block equality terms feed C(k,m)
-    # band-match booleans and array_position picks the first true one —
-    # a naive "band j ⇒ every earlier band key differs" CASE repeats the
-    # band-key bit math O(C(k,m)²) times and blows past the JVM's 64 KB
-    # method limit, kicking the whole stage out of codegen (2M-signature
-    # bench, local[32] warm: 48 s naive CASE, ~12-13 s dropDuplicates,
-    # 8.6 s this form).
+    # elimination): keep a candidate only in the FIRST band whose keys
+    # agree, a codegen filter instead of a dropDuplicates exchange.  Kept
+    # COMPACT (README): k per-block equality terms feed C(k,m) band-match
+    # booleans and array_position picks the first true one; repeating the
+    # band-key bit math per earlier band blows the JVM's 64 KB method
+    # limit and drops the stage out of codegen.
     eq_terms = [f"(({block(i, '_sa')}) = ({block(i, '_sb')}))" for i in range(k)]
     band_match = [
         "(" + " AND ".join(eq_terms[i] for i in combo) + ")" for combo in combos
@@ -262,16 +236,16 @@ def image_phash_neardup(
     and materialized BEFORE the band self-join, so the decode+DCT pandas
     UDF — the expensive stage — evaluates exactly once per image instead
     of once per join side; the cache holds only (id, 8-byte signature)
-    rows and is dropped with the session (or via
-    ``spark.catalog.clearCache()``)."""
+    rows and is released by the next call (:func:`session.cache_per_call`)."""
     if signature_col is not None:
         sig = images.select(
             F.col(id_col).alias("_id"),
             F.col(signature_col).cast("long").alias("_sig"),
         )
         return hamming_pairs(sig, max_hamming, blocks_per_key=blocks_per_key)
-    sig = images.select(
-        F.col(id_col).alias("_id"), phash_udf(bytes_col, fmt_col).alias("_sig")
-    ).persist()
+    sig = cache_per_call(
+        "image_phash_neardup",
+        images.select(F.col(id_col).alias("_id"), phash_udf(bytes_col, fmt_col).alias("_sig")),
+    )
     sig.count()  # materialize once: both self-join legs read the cache
     return hamming_pairs(sig, max_hamming, blocks_per_key=blocks_per_key)

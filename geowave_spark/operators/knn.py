@@ -289,11 +289,14 @@ def knn_join(
     include_distance: bool = False,
     exclude_self: bool = False,
     dense_cell_threshold: int | None = None,
+    group_target: int = 256,
 ) -> DataFrame:
     """For each query point: its ≤k nearest candidates within max_distance.
 
     Deterministic tie-break: (squared distance, candidate_id).  Output
-    columns: query_id, candidate_id, rank[, dist2].
+    columns: query_id, candidate_id, rank[, dist2].  The supercell factor
+    is the smallest that gives at most ``group_target`` occupied
+    supercells; it changes the plan, never the rows.
     """
     if max_distance <= 0:
         raise ValueError("max_distance must be positive")
@@ -339,29 +342,15 @@ def knn_join(
             [], f"{query_id} {dict(qry.dtypes)['_qid']}, {candidate_id} {dict(cand.dtypes)['_cid']}, rank int, dist2 double"
         )
         return empty if include_distance else empty.drop("dist2")
-    group_target = int(
-        __import__("os").environ.get("SPARK_GRAFT_KNN_GROUPS", "256")
-    )
-    S = factors[-1]
-    for s in factors:
-        if stats[f"g{s}"] <= group_target:
-            S = s
-            break
+    S = next((s for s in factors if stats[f"g{s}"] <= group_target), factors[-1])
     if auto_chunk:
-        # Data-driven (NOT parallelism-driven) chunk cap.  Hot-supercell
-        # splitting replicates the cell's candidates ×⌈n/limit⌉, so the
-        # cap directly prices total work: Σ n_i²/limit extra shuffle rows
-        # and grid builds.  Round 2 scaled the cap with the core count,
-        # which made the 32-core run replicate ~4× more rows than the
-        # 8-core run on identical input (profiled: 6.6M vs 1.7M candidate
-        # rows) — the measured anti-scaling was the job DOING more work at
-        # more cores, not failing to parallelize it.  A fixed
-        # ~INPUT/48-target keeps the dataflow identical at every
-        # parallelism (the north rule's two-cluster-size comparison then
-        # measures the engine, not the plan drift) while still splitting a
-        # pathological cluster into enough chunks to occupy a wave of
-        # cores.  Explicit dense_cell_threshold disables this (tests pin
-        # exact split behavior with it).
+        # Data-driven, NOT parallelism-driven, chunk cap: hot-supercell
+        # splitting replicates a cell's candidates ×⌈n/limit⌉, so the cap
+        # prices total work (Σ n_i²/limit extra rows and grid builds); a
+        # cap scaled with the core count made more cores do more work.
+        # ~INPUT/48 keeps the dataflow identical at every parallelism and
+        # still splits a pathological cluster into a wave of chunks.  An
+        # explicit dense_cell_threshold disables this (tests pin splits).
         chunk_limit = max(4_000, min(chunk_limit, int(np.ceil(stats["n"] / 48))))
     hot_rows = (
         cand.groupBy(
@@ -383,10 +372,8 @@ def knn_join(
     # supercells within cs of the point) is two exploded per-axis offset
     # arrays (array_distinct keeps ≤2 values/axis, so ≤4 copies/point);
     # hot-supercell chunk factors come from a broadcast hash join against
-    # the (tiny) hot list collected above.  Round 1 ran these as two
-    # mapInPandas passes — the arithmetic is identical, but keeping it in
-    # whole-stage codegen removes two Arrow Python exchanges from the
-    # slowest-scaling operator.
+    # the (tiny) hot list collected above.  Whole-stage codegen, not
+    # mapInPandas: no Arrow Python exchange in the assignment.
     hot_df = (
         spark.createDataFrame(
             [(sx, sy, m) for (sx, sy), m in hot.items()], "_sx bigint, _sy bigint, _m int"

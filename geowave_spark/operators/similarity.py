@@ -15,7 +15,9 @@ Training-data-pipeline operators (driver brief):
   search only the ``nprobe`` nearest buckets.  Equi-join on bucket id, so
   the scan cost drops by ~C/nprobe vs brute force.
 - ``cosine_neardup_pairs``: embedding near-duplicate pairs via random
-  hyperplane LSH (sign bits → bucket equi-join) + exact cosine verify.
+  hyperplane LSH band keys → the id-only candidate kernel shared with
+  MinHash (:func:`dedup._first_band_pairs`) → vectors fetched by id for
+  the candidates only → exact cosine verify, each norm computed once.
 """
 
 from __future__ import annotations
@@ -26,14 +28,22 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType, StructField, StructType
 
+from geowave_spark.operators.dedup import _first_band_pairs
 
-def _cosine_expr(a: str, b: str):
+
+def _norm_expr(a: str):
+    """Catalyst L2 norm of an array<double> column."""
+    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
+
+
+def _cosine_expr(a: str, b: str, na=None, nb=None):
     """Catalyst cosine similarity between two array<double> columns; an
     all-zero vector has similarity 0.0 with anything (as in
-    :func:`_unit_rows`)."""
+    :func:`_unit_rows`).  ``na``/``nb`` are the vectors' norms when the
+    caller computed them once per vector (:func:`_norm_expr`)."""
     dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
+    na = _norm_expr(a) if na is None else F.col(na)
+    nb = _norm_expr(b) if nb is None else F.col(nb)
     den = na * nb
     return F.when(den > 0.0, dot / den).otherwise(F.lit(0.0))
 
@@ -43,6 +53,27 @@ def _unit_rows(X: np.ndarray) -> np.ndarray:
     cosine with anything is 0.0 (the rule of :func:`_cosine_expr`)."""
     n = np.linalg.norm(X, axis=1, keepdims=True)
     return np.divide(X, n, out=np.zeros_like(X), where=n > 0.0)
+
+
+def _batch_top(sims: np.ndarray, keep_n: int, margin: float = 0.0):
+    """(query, row) indices of each query's ``keep_n`` best scores in one
+    Arrow batch, every boundary tie (and anything within ``margin`` of the
+    boundary) included, so a global (−sim, id) rank over the union of
+    batches stays exact."""
+    B = sims.shape[1]
+    if B <= keep_n:
+        return np.nonzero(np.ones(sims.shape, dtype=bool))
+    kth = np.partition(sims, B - keep_n, axis=1)[:, B - keep_n]
+    return np.nonzero(sims >= kth[:, None] - margin)
+
+
+def _top_k(scored: DataFrame, k: int, exclude_self: bool) -> DataFrame:
+    """``scored`` (_qid, _nid, _sim) ranked per query by (−sim, _nid) and
+    cut at ``k``; adds ``rank``."""
+    if exclude_self:
+        scored = scored.where(F.col("_qid") != F.col("_nid"))
+    w = Window.partitionBy("_qid").orderBy(F.col("_sim").desc(), F.col("_nid").asc())
+    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def brute_topk(
@@ -86,26 +117,17 @@ def brute_topk(
             ]
         )
 
-        # per-batch partial top-k: each batch emits only its own top
-        # keep_n rows per query (plus ALL boundary ties, so the global
-        # (−sim, id) order stays exact), so the exchange feeding the
-        # ranking window carries O(k·batches) rows per query, not O(N)
+        # per-batch partial top-k: the exchange feeding the ranking
+        # window carries O(k·batches) rows per query, not O(N)
         keep_n = k + (1 if exclude_self else 0)
 
         def _score(batches):
             ids, qmat = bc.value
             ids_arr = np.asarray(ids)
             for pdf in batches:
-                nm = np.array(pdf["_nv"].tolist(), dtype=np.float64)
-                nm = _unit_rows(nm)
+                nm = _unit_rows(np.array(pdf["_nv"].tolist(), dtype=np.float64))
                 sims = qmat @ nm.T  # (Q, B)
-                B = sims.shape[1]
-                if B > keep_n:
-                    kth = np.partition(sims, B - keep_n, axis=1)[:, B - keep_n]
-                    mask = sims >= kth[:, None]
-                else:
-                    mask = np.ones(sims.shape, dtype=bool)
-                qi, bi = np.nonzero(mask)
+                qi, bi = _batch_top(sims, keep_n)
                 yield pd.DataFrame(
                     {
                         "_qid": ids_arr[qi],
@@ -116,18 +138,11 @@ def brute_topk(
 
         scored = c.mapInPandas(_score, out_schema)
 
-    if exclude_self:
-        scored = scored.where(F.col("_qid") != F.col("_nid"))
-    w = Window.partitionBy("_qid").orderBy(F.col("_sim").desc(), F.col("_nid").asc())
-    out = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("_qid").alias(query_id if query_id != corpus_id else "query_id"),
-            F.col("_nid").alias("neighbor_id"),
-            "rank",
-            F.round(F.col("_sim"), 6).alias("sim"),
-        )
+    out = _top_k(scored, k, exclude_self).select(
+        F.col("_qid").alias(query_id if query_id != corpus_id else "query_id"),
+        F.col("_nid").alias("neighbor_id"),
+        "rank",
+        F.round(F.col("_sim"), 6).alias("sim"),
     )
     if not include_sim:
         out = out.drop("sim")
@@ -155,8 +170,7 @@ def train_centroids(
         .limit(sample)
         .collect()
     )
-    X = np.array([r[1] for r in pdf], dtype=np.float64)
-    X = _unit_rows(X)
+    X = _unit_rows(np.array([r[1] for r in pdf], dtype=np.float64))
     rng = np.random.default_rng(seed)
     cent = X[rng.choice(len(X), num_centroids, replace=False)]
     for _ in range(iters):
@@ -188,14 +202,12 @@ def ivf_topk(
 
     @F.pandas_udf(IntegerType())
     def _bucket(v: pd.Series) -> pd.Series:
-        X = np.array(v.tolist(), dtype=np.float64)
-        X = _unit_rows(X)
+        X = _unit_rows(np.array(v.tolist(), dtype=np.float64))
         return pd.Series(np.argmax(X @ bc.value.T, axis=1).astype(np.int32))
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def _probes(v: pd.Series) -> pd.Series:
-        X = np.array(v.tolist(), dtype=np.float64)
-        X = _unit_rows(X)
+        X = _unit_rows(np.array(v.tolist(), dtype=np.float64))
         sims = X @ bc.value.T
         order = np.argsort(-sims, axis=1)[:, :nprobe].astype(np.int32)
         return pd.Series(list(order))
@@ -211,13 +223,8 @@ def ivf_topk(
         F.explode(_probes(F.col(vec))).alias("_bkt"),
     )
     scored = q.join(c, "_bkt").withColumn("_sim", _cosine_expr("_qv", "_nv"))
-    if exclude_self:
-        scored = scored.where(F.col("_qid") != F.col("_nid"))
-    w = Window.partitionBy("_qid").orderBy(F.col("_sim").desc(), F.col("_nid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(F.col("_qid").alias("query_id"), F.col("_nid").alias("neighbor_id"), "rank")
+    return _top_k(scored, k, exclude_self).select(
+        F.col("_qid").alias("query_id"), F.col("_nid").alias("neighbor_id"), "rank"
     )
 
 
@@ -346,16 +353,8 @@ def sq_topk(
         ids_arr = np.asarray(ids)
         for pdf in batches:
             raw = np.frombuffer(b"".join(pdf["_code"]), dtype=np.uint8)
-            X = raw.reshape(len(pdf), -1) * sc + mn  # dequantized approx
-            X = _unit_rows(X)
-            sims = qmat @ X.T
-            B = sims.shape[1]
-            if B > keep_n:
-                kth = np.partition(sims, B - keep_n, axis=1)[:, B - keep_n]
-                mask = sims >= kth[:, None] - margin
-            else:
-                mask = np.ones(sims.shape, dtype=bool)
-            qi, bi = np.nonzero(mask)
+            X = _unit_rows(raw.reshape(len(pdf), -1) * sc + mn)  # dequantized approx
+            qi, bi = _batch_top(qmat @ X.T, keep_n, margin)
             yield pd.DataFrame(
                 {"_qid": ids_arr[qi], "_nid": pdf["_nid"].to_numpy()[bi]}
             )
@@ -371,13 +370,8 @@ def sq_topk(
     scored = cand.join(c, "_nid").join(q, "_qid").withColumn(
         "_sim", _cosine_expr("_qv", "_nv")
     )
-    if exclude_self:
-        scored = scored.where(F.col("_qid") != F.col("_nid"))
-    w = Window.partitionBy("_qid").orderBy(F.col("_sim").desc(), F.col("_nid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(F.col("_qid").alias("query_id"), F.col("_nid").alias("neighbor_id"), "rank")
+    return _top_k(scored, k, exclude_self).select(
+        F.col("_qid").alias("query_id"), F.col("_nid").alias("neighbor_id"), "rank"
     )
 
 
@@ -391,7 +385,7 @@ def cosine_neardup_pairs(
     seed: int = 42,
 ) -> DataFrame:
     """Embedding near-duplicate pairs (cosine ≥ threshold) via random
-    hyperplane LSH banding + exact verify."""
+    hyperplane LSH banding + exact verify; no vector crosses the pair join."""
     dim = len(corpus.select(vec).first()[0])
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((num_planes, dim))
@@ -412,18 +406,18 @@ def cosine_neardup_pairs(
             sigs[:, b] = (chunk * w).sum(axis=1) | (np.uint64(b) << np.uint64(56))
         return pd.Series(list(sigs.astype(np.int64)))
 
-    sig = corpus.select(
-        F.col(corpus_id).alias("_id"),
-        F.col(vec).cast("array<double>").alias("_v"),
-        F.explode(_bandsig(F.col(vec))).alias("_bucket"),
+    vecs = corpus.select(
+        F.col(corpus_id).alias("_id"), F.col(vec).cast("array<double>").alias("_v")
     )
-    a = sig.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"), "_bucket")
-    b = sig.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"), "_bucket")
+    pairs = _first_band_pairs(vecs.select("_id", _bandsig("_v").alias("_keys")), bands)
+    # fetch vectors by id for the candidates only; norms once per vector
+    normed = vecs.select("_id", "_v", _norm_expr("_v").alias("_n"))
+    va = normed.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"), F.col("_n").alias("_na"))
+    vb = normed.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"), F.col("_n").alias("_nb"))
     return (
-        a.join(b, "_bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("sim", _cosine_expr("_va", "_vb"))
+        pairs.join(va, "id_a")
+        .join(vb, "id_b")
+        .withColumn("sim", _cosine_expr("_va", "_vb", "_na", "_nb"))
         .where(F.col("sim") >= threshold)
         .select("id_a", "id_b", F.round("sim", 6).alias("sim"))
     )

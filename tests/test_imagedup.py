@@ -13,14 +13,35 @@ import pandas as pd
 import pytest
 
 from geowave_spark.operators.imagedup import (
+    _C32,
     _luma_grid_32,
     hamming_pairs,
     image_phash_neardup,
     phash_from_grids,
-    phash_from_pixels,
 )
 from geowave_spark.raster.codec import decode_image, encode_image
 from geowave_spark.sources.images import gen_pixels
+
+
+def phash_from_pixels(px: np.ndarray) -> int:
+    """Classic DCT pHash of one decoded image, as a signed 64-bit int.
+
+    Luminance → 32×32 area mean → DCT-II → the 8×8 low-frequency
+    corner, DC dropped → each of the remaining 63 coefficients
+    thresholded against their median (bit 63 of the packed hash is the
+    always-zero DC slot, keeping the layout a stable 64-bit word).
+
+    Scalar loop kept deliberately independent of :func:`phash_from_grids`
+    so the tests can cross-check the batched path against it."""
+    f = _C32 @ _luma_grid_32(px) @ _C32.T
+    low = f[:8, :8].ravel()
+    coeffs = low[1:]  # drop DC: overall brightness must not flip bits
+    bits = coeffs > np.median(coeffs)
+    v = np.uint64(0)
+    for bit in bits.tolist():
+        v = (v << np.uint64(1)) | np.uint64(bit)
+    iv = int(v)
+    return iv - (1 << 64) if iv >= (1 << 63) else iv
 
 def _mk_images(n=96, dup_groups=12):
     """Deterministic synthetic images with planted near-duplicates.
@@ -172,6 +193,17 @@ class TestPairs:
         assert plan.index("ArrowEvalPython") > plan.index("InMemoryRelation")
         result.sparkSession.catalog.clearCache()
         images.cache().count()  # re-cache the module fixture for later tests
+
+    def test_repeated_calls_release_cache(self, spark, images):
+        """Each call unpersists the signature cache the previous call left
+        (each call sees a different input, so its cache is a new one)."""
+        from pyspark.sql import functions as F
+
+        counts = []
+        for i in range(3):
+            image_phash_neardup(images.where(F.col("image_id") != f"img{i:04d}"), 4).collect()
+            counts.append(spark.sparkContext._jsc.getPersistentRDDs().size())
+        assert counts[-1] <= counts[0], counts
 
     def test_signature_col_skips_decode(self, spark, images, images_pdf):
         """A pre-materialized hash column (input-hint `phash`) must yield

@@ -100,6 +100,32 @@ def test_knn_coincident_tiebreak(spark):
         assert sorted(got[f"q{i}"]) == [(rk + 1, f"c{i}_{rk}") for rk in range(3)]
 
 
+def test_knn_group_target_changes_plan_not_rows(spark, pts, pts_pdf):
+    """``group_target`` picks the supercell factor S (the plan's supercell
+    edge max_distance·S); the rows must not depend on it."""
+    import re
+
+    def run(group_target):
+        df = knn_join(
+            pts,
+            pts.select(pts.image_id.alias("cid"), "lon", "lat"),
+            k=3,
+            max_distance=0.2,
+            query_id="image_id",
+            candidate_id="cid",
+            exclude_self=True,
+            group_target=group_target,
+        )
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        spans = set(re.findall(r"\+ 180\.0\) / ([0-9.E]+)\)", plan)) - {"0.2"}
+        return spans, sorted((r["image_id"], r["cid"], r["rank"]) for r in df.collect())
+
+    fine_spans, fine_rows = run(10**9)  # every factor fits: S = 1
+    coarse_spans, coarse_rows = run(1)
+    assert fine_spans == set() and coarse_spans, (fine_spans, coarse_spans)
+    assert fine_rows == coarse_rows and len(fine_rows) > 0
+
+
 @pytest.mark.parametrize("k,max_dist", [(1, 0.05), (5, 0.2)])
 def test_knn_parity(spark, pts, pts_pdf, k, max_dist):
     got_rows = knn_join(

@@ -4,6 +4,10 @@ Oracles: numpy brute force (pairwise Jaccard / Hamming / cosine) and
 DuckDB SQL where expressible.
 """
 
+import itertools
+import re
+import string
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -13,6 +17,7 @@ from geowave_spark.operators.dedup import (
     _shingles,
     exact_dedup,
     minhash_lsh_dedup,
+    minhash_udf,
     simhash_pairs,
 )
 from geowave_spark.operators.similarity import brute_topk, cosine_neardup_pairs, ivf_topk
@@ -22,6 +27,7 @@ from geowave_spark.operators.text import (
     quality_features,
     token_count,
 )
+from tools.audit_plans import plan_of
 
 rng = np.random.default_rng(42)
 WORDS = ["alpha", "bravo", "charlie", "delta", "echo", "foxtrot", "golf", "hotel", "the", "a", "le", "der"]
@@ -74,6 +80,21 @@ def emb(spark, emb_pdf):
     return spark.createDataFrame(pdf).cache()
 
 
+def persistent_rdds_per_call(spark, call, n=3):
+    """Persistent RDD count after each of ``n`` collected calls; call ``i``
+    gets its own input, so a cache it leaves is a new one."""
+    counts = []
+    for i in range(n):
+        call(i).collect()
+        counts.append(spark.sparkContext._jsc.getPersistentRDDs().size())
+    return counts
+
+
+# the dropDuplicates(id_a, id_b) shape the shared pair kernel replaced:
+# an aggregate (Hash, or Sort when it carries arrays) and its exchange
+DEDUPE_EXCHANGE = re.compile(r"Aggregate|hashpartitioning\(id_a#\d+L?, id_b")
+
+
 def oracle_jaccard_pairs(pdf, threshold, n=3):
     sh = [_shingles(t, n) for t in pdf["text"]]
     out = set()
@@ -103,6 +124,48 @@ class TestDedup:
         # essentially perfect at this signature size for jaccard ≥ 0.6
         assert got <= want
         assert len(got) >= 0.9 * len(want) and len(want) >= 15
+
+    def test_minhash_pair_survives_dropped_first_band(self, spark):
+        """A pair whose FIRST agreeing band falls in an over-``max_bucket``
+        bucket is still emitted from a later band it agrees on: the
+        first-band filter must treat a dropped band as non-matching."""
+        mh = minhash_udf(64, 3).func
+        grams = ["".join(t) for t in itertools.product(string.ascii_lowercase, repeat=3)]
+        # the 3-gram with the smallest hash-0 value sets minhash 0 of every
+        # doc that contains it
+        star = grams[int(np.argmin(np.array(mh(pd.Series(grams)).tolist())[:, 0]))]
+        r = np.random.default_rng(5)
+        words = ["".join(r.choice(list(string.ascii_lowercase), 6)) for _ in range(400)]
+        base = " ".join(r.choice(words, 30))
+        texts = [f"{star} {base}", f"{star} {base} tail"] + [
+            f"{star} " + " ".join(r.choice(words, 30)) for _ in range(4)
+        ]
+        sig = np.array(mh(pd.Series(texts)).tolist())
+        # bands=64 → one minhash per band: all six docs share band 0 (a
+        # 6-row bucket over max_bucket=3) and the pair also agrees later
+        assert (sig[:, 0] == sig[0, 0]).all() and (sig[0, 1:] == sig[1, 1:]).any()
+        pdf = pd.DataFrame({"doc_id": np.arange(6, dtype=np.int64), "text": texts})
+        with pytest.warns(UserWarning, match="dropped"):
+            rows = minhash_lsh_dedup(
+                spark.createDataFrame(pdf), threshold=0.6, bands=64, max_bucket=3
+            ).collect()
+        got = {(r["id_a"], r["id_b"]) for r in rows}
+        assert got == oracle_jaccard_pairs(pdf, 0.6) == {(0, 1)}
+
+    def test_minhash_pair_plan_has_no_dedupe(self, spark, docs):
+        plan = plan_of(minhash_lsh_dedup(docs, threshold=0.6))
+        assert not DEDUPE_EXCHANGE.search(plan)
+
+    @pytest.mark.parametrize("op", ["minhash", "simhash"])
+    def test_repeated_calls_release_cache(self, spark, docs, op):
+        def call(i):
+            part = docs.where(F.col("doc_id") != i)
+            if op == "minhash":
+                return minhash_lsh_dedup(part, threshold=0.6)
+            return simhash_pairs(part, max_hamming=6)
+
+        counts = persistent_rdds_per_call(spark, call)
+        assert counts[-1] <= counts[0], counts
 
     def test_simhash_pairs_verified(self, spark, docs):
         rows = simhash_pairs(docs, max_hamming=6).collect()
@@ -239,6 +302,30 @@ class TestSimilarity:
         ii, jj = np.nonzero(np.triu(sims >= 0.98, 1))
         want = set(zip(ii.tolist(), jj.tolist()))
         assert got <= want and len(got) >= 0.9 * len(want) and len(want) >= 10
+
+    def test_cosine_neardup_equals_lsh_oracle(self, spark, emb, emb_pdf):
+        """Row set and ``sim`` equal the numpy LSH oracle (same seeded
+        planes and bands); planted pairs agree in several bands, so the
+        first-band filter must emit each of them once."""
+        from tools.oracle_values import cosine_lsh_pairs
+
+        X = np.array([v for v in emb_pdf["embedding"]], dtype=np.float64)
+        want = cosine_lsh_pairs(emb_pdf["vec_id"].tolist(), X, 0.3)
+        rows = cosine_neardup_pairs(emb, threshold=0.3).collect()
+        got = sorted((r["id_a"], r["id_b"], r["sim"]) for r in rows)
+        assert got == sorted(want) and len(got) > 100
+        planes = np.random.default_rng(42).standard_normal((16, X.shape[1]))
+        keys = ((X @ planes.T > 0).reshape(len(X), 4, 4) * (1 << np.arange(4))).sum(axis=2)
+        a, b = (np.array([p[i] for p in got]) for i in (0, 1))
+        assert ((keys[a] == keys[b]).sum(axis=1) >= 2).sum() >= 10
+
+    def test_cosine_pair_plan(self, spark, emb):
+        """No dedupe exchange, and the band-signature UDF runs once per
+        join leg (no inferred size(_keys) > 0 filter re-evaluating it)."""
+        plan = plan_of(cosine_neardup_pairs(emb, threshold=0.98))
+        assert not DEDUPE_EXCHANGE.search(plan)
+        udf_nodes = re.findall(r"^\(\d+\) ArrowEvalPython\n.*\nArguments: (.*)$", plan, re.M)
+        assert 1 <= len(udf_nodes) <= 2 and all("_bandsig" in a for a in udf_nodes)
 
 
 class TestText:

@@ -77,7 +77,8 @@ def main():
         "kmeans_hulls",            # deterministic Lloyd iterations
         "spatial_crosses_join",    # DE-9IM fine filter over the coarse cell phase
         "tile_assignment",         # zero-shuffle per-image lattice gather
-        "minhash_neardup",         # banded LSH bucket equi-join, no all-pairs
+        "minhash_neardup",         # id-only band-key pair kernel, no dedupe exchange
+        "cosine_neardup",          # same kernel; vectors fetched by id for candidates
         "phash_neardup",           # dedupe → multi-index band join → size join-back
         "spatial_distance_join_bucketed",  # one Exchange total: probe scans buckets
     ]

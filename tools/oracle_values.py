@@ -160,15 +160,27 @@ def cosine_pair_rows(
     bands: int = 4,
     seed: int = 42,
 ) -> list[tuple[int, int, float]]:
-    """(id_a, id_b, sim) via random-hyperplane band LSH + exact cosine."""
+    """(id_a, id_b, sim) of the embeddings table via :func:`cosine_lsh_pairs`."""
     import duckdb
 
     rows = duckdb.sql(
         f"SELECT vec_id, embedding FROM '{sf_dir}/embeddings.parquet' ORDER BY vec_id"
     ).fetchall()
-    ids = [r[0] for r in rows]
     # engine casts array<float> to array<double>: float32 → float64
     X = np.array([np.asarray(r[1], dtype=np.float32) for r in rows]).astype(np.float64)
+    return cosine_lsh_pairs([r[0] for r in rows], X, threshold, num_planes, bands, seed)
+
+
+def cosine_lsh_pairs(
+    ids: list,
+    X: np.ndarray,
+    threshold: float,
+    num_planes: int = 16,
+    bands: int = 4,
+    seed: int = 42,
+) -> list[tuple[int, int, float]]:
+    """(id_a, id_b, sim) via random-hyperplane band LSH + exact cosine
+    over the float64 rows ``X`` keyed by ``ids``."""
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((num_planes, X.shape[1]))
     bits = (X @ planes.T > 0).astype(np.uint64)
